@@ -17,7 +17,7 @@ import graft.util.Clock
   * partition drop ([[Sinks.retentionDropPartitions]]) — kept days are never
   * read or rewritten, so cleanup cost is O(expired data) at any scale. A
   * non-partitioned table falls back to filter + staged rewrite + atomic
-  * swap ([[Sinks.retentionRewrite]] semantics).
+  * [[Sinks.replaceDir]] swap.
   *
   * `asOf` defaults to max(dateCol) in the data, never the wall clock —
   * the one-clock fix for the reference's local-server-clock bug

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.FixedWidth._
@@ -97,9 +97,8 @@ object DailyIngest {
                                      NaturalKey, "left_anti"))
       } else temp
       val staged = s"${lay.finalT}_staged"
-      promoted.repartition(col("f_shipdate"))
-        .write.mode(SaveMode.Overwrite).partitionBy("f_shipdate").parquet(staged)
-      replace(spark, staged, lay.finalT)
+      Sinks.writeDatePartitioned(promoted, "f_shipdate", staged)
+      Sinks.replaceDir(spark, staged, lay.finalT)
 
       // 7: rollups from the promoted table
       val finalT = spark.read.parquet(lay.finalT)
@@ -114,10 +113,10 @@ object DailyIngest {
         .write.mode(SaveMode.Overwrite).parquet(lay.salesAgg)
 
       // 8: retention on the final table (exclusive < asOf - days) — a pure
-      //    partition drop on the date layout: kept days are never rewritten
-      // primitive (string) collect — never decode java.sql.Date driver-side
-      val asOf = java.sql.Date.valueOf(java.time.LocalDate.parse(
-        finalT.agg(max("f_shipdate").cast("string")).head().getString(0)))
+      //    partition drop on the date layout: kept days are never rewritten.
+      //    asOf is the newest partition directory name, the cleanup job's
+      //    rule (partitionBy writes a directory only for a date with rows)
+      val asOf = Cleanup.deriveAsOf(spark, lay.finalT, "f_shipdate", partitioned = true)
       Sinks.retentionDropPartitions(spark, lay.finalT, "f_shipdate", asOf, retentionDays)
 
       // 9: archive the input
@@ -144,7 +143,4 @@ object DailyIngest {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
-
-  private def replace(spark: SparkSession, src: String, dst: String): Unit =
-    Sinks.replaceDir(spark, src, dst)
 }

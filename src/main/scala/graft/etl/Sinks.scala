@@ -4,8 +4,6 @@ import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.Clock
-
 /** Sinks — the reference's write surface (SURVEY.md §2.4):
   *
   *  - K1 JDBC batch insert: 150-row array-bound batches
@@ -17,10 +15,10 @@ import graft.util.Clock
   *    `Daily/<YYYY>/<YYYYMMDD>/<name>` (main.py:353-398, layout :366-368),
   *    idempotent when the destination exists (main.py:375).
   *  - K5 retention delete (daily_cleanup.py:19-79): strictly-exclusive
-  *    `business_date < asOf − days` drop. Without a transactional table
-  *    format this is filter + partitioned overwrite; the date-partitioned
-  *    layout makes it a pure partition drop at scale (no data rewrite of
-  *    kept days).
+  *    `business_date < asOf − days` drop. On the date-partitioned layout
+  *    it is a pure partition drop ([[retentionDropPartitions]], no data
+  *    rewrite of kept days); [[Cleanup.run]] owns the filter + staged
+  *    rewrite fallback for a non-partitioned table.
   *
   * Delivery semantics (SURVEY.md §2.5 C3): JDBC append is at-least-once —
   * exactly-once requires staging to storage and an idempotent MERGE, which
@@ -180,23 +178,6 @@ object Sinks {
     if (hadDst) require(fs.rename(dstP, oldP), s"rename $dst -> $oldP failed")
     require(fs.rename(srcP, dstP), s"rename $src -> $dst failed")
     if (hadDst) fs.delete(oldP, true)
-  }
-
-  /** K5: retention rewrite — keep rows with `dateCol >= asOf - days`
-    * (exclusive delete bound, daily_cleanup.py:30) and overwrite `outDir`
-    * date-partitioned. Returns (kept, deleted) counts.
-    *
-    * This is the NON-partitioned fallback: it rewrites every kept row. On a
-    * `dateCol=`-partitioned table use [[retentionDropPartitions]], which
-    * touches only expired directories.
-    */
-  def retentionRewrite(df: DataFrame, dateCol: String, asOf: java.sql.Date,
-                       outDir: String, days: Int = 4): (Long, Long) = {
-    val total = df.count()
-    val kept = df.filter(Clock.retentionKeep(col(dateCol), lit(asOf), days))
-    writeDatePartitioned(kept, dateCol, outDir)
-    val n = kept.sparkSession.read.parquet(outDir).count()
-    (n, total - n)
   }
 
   /** Small-file compaction for the date-partitioned layout — the

@@ -27,7 +27,7 @@ import graft.Tables
   * (banded, candidate pairs, candidate shingles) for intra-query reuse and
   * leaves reclamation to the session per the package-level contract
   * ([[graft.ops]]): callers `spark.catalog.clearCache()` after consuming a
-  * result — Bench, Verify, and StageBench do.
+  * result — Bench and Verify do.
   */
 object Dedup {
 
@@ -644,19 +644,6 @@ object Dedup {
           col("b.n") >= lit(t) * col("a.n") - lit(PrefixCeilEps))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-
-  /** The fully-lazy candidate plan — identical candidate set to
-    * [[jaccardPrefixCandidates]] with NO persists: no pin outlives the
-    * call, the rank pass re-executes per join side, and every consumer
-    * pays its own recompute. PUBLIC (r10 advice follow-through, symmetric
-    * with the scoped prefix-index pin): library consumers that fold the
-    * candidates into a single action, or that manage caching themselves,
-    * opt out of the retained `cand` pin the eager variant holds under the
-    * harness's per-query clearCache convention. Also the plan-audit
-    * surface mirroring what the eager variant materializes.
-    */
-  def jaccardPrefixCandidatesLazy(sh: DataFrame, t: Double): DataFrame =
-    jaccardPrefixSelfJoin(jaccardPrefixIndex(sh, t), t)
 
   /** Threshold for the prefix-filtered operator: the dedup-typical 0.8,
     * NOT the exploratory 0.5 the unpruned/capped operators run at. This is

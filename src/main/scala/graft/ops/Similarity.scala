@@ -446,8 +446,8 @@ object Similarity {
     * grow it ~√N) by growing the stride with the corpus — which keeps the
     * build LINEAR in N instead of quadratic. Default = [[CentroidStride]],
     * the fixture-scale contract every serving query and oracle assumes;
-    * [[graft.tools.ScaleCurve]] measures the fixed-C policy's curve by
-    * passing `stride = CentroidStride × factor` at each replication factor.
+    * the fixed-C policy's curve is measured by passing
+    * `stride = CentroidStride × factor` at each replication factor.
     */
   def stageIvfIndex(spark: SparkSession, dir: String,
                     stride: Long = CentroidStride): (String, String) = {
@@ -1866,12 +1866,12 @@ object Similarity {
   }
 
   /** ANN-path projection width and coarse shortlist for [[knnRp]]. Chosen
-    * on the fixture's recall surface (truth = exact top-5; measured by
-    * `graft.tools.RpSweep` at BOTH fixture scales — the r10 32/100 point
-    * sat at 0.80): at sf0.1, 32/200 → 0.74, 48/200 → 0.87, 48/250 → 0.91,
-    * 48/300 → 0.94 (sf0.01: 1.00); 64+ planes would score higher still but
-    * stop being a compressed domain at all on 64-d embeddings (the coarse
-    * scan would cost brute force). 48/300 keeps the projection 25% narrower
+    * on the fixture's recall surface (truth = exact top-5; measured at
+    * BOTH fixture scales — the r10 32/100 point sat at 0.80): at sf0.1,
+    * 32/200 → 0.74, 48/200 → 0.87, 48/250 → 0.91, 48/300 → 0.94
+    * (sf0.01: 1.00); 64+ planes would score higher still but stop being
+    * a compressed domain at all on 64-d embeddings (the coarse scan would
+    * cost brute force). 48/300 keeps the projection 25% narrower
     * than full width, the shortlist a per-query constant (corpus-invariant
     * re-rank cost), and recall ≥0.90 at both scales with headroom —
     * training-free, so the right trade when the corpus distribution drifts

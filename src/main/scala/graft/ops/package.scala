@@ -16,11 +16,11 @@ package graft
   *
   * The contract for library consumers: after materializing a query's
   * result (collect / write / count), call `spark.catalog.clearCache()`
-  * before the next query if the session is long-lived. `graft.Bench`,
-  * `graft.Verify`, and `graft.tools.StageBench` all do this between
-  * queries; a consumer that never clears accumulates cached blocks in
-  * executor storage memory until LRU eviction — correct but
-  * memory-pressuring on a shared cluster.
+  * before the next query if the session is long-lived. `graft.Bench`
+  * and `graft.Verify` both do this between queries; a consumer that
+  * never clears accumulates cached blocks in executor storage memory
+  * until LRU eviction — correct but memory-pressuring on a shared
+  * cluster.
   *
   * Builders that persist also materialize the cache eagerly (`.count()`
   * after `.persist()`) whenever the relation feeds two consumers inside

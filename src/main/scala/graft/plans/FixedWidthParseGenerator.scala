@@ -62,6 +62,16 @@ case class FixedWidthParseExplode(child: Expression, widthExpr: Expression,
       }
     }.toSeq)
 
+  /** The records of one packed input, emitted lazily.
+    *
+    * Reuse contract: every emitted element is the SAME mutable
+    * `SpecificInternalRow`, overwritten on each `next()`. A consumer makes
+    * one pass and copies (or projects) each row before advancing —
+    * GenerateExec does, projecting every row to a fresh UnsafeRow. Anything
+    * that buffers the iterator (`eval(r).iterator.toSeq`) sees every element
+    * aliased to the last record, so a direct test goes through the SQL
+    * engine or copies every row.
+    */
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val s = child.eval(input).asInstanceOf[UTF8String]
     if (s == null || s.numBytes == 0) return Nil

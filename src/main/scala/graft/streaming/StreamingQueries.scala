@@ -96,15 +96,13 @@ object StreamingQueries {
     * `chmod` subprocess on every file create/mkdir. A stateful drain
     * multiplies that per state store per micro-batch — q_stream_join
     * (32 partitions × 4 join stores) measured ~6,500 fork+execs per
-    * run, q_stream_sessions ~2,000, a batch query ~0
-    * (tools/ForkAudit + tools/StackProfile carry the per-op and
-    * hot-path evidence) — and fork cost of a many-GB JVM grows with RSS
-    * and host memory pressure, which is exactly the post-Verify
-    * driver-session amplification the pair showed in r13–r16. The
-    * checkpoint is explicit (under target/tmp, per query name), cleared
-    * BEFORE each run — a stale AvailableNow checkpoint would replay
-    * nothing and return an empty sink — and removed after the readout
-    * like the temporary checkpoint it replaces.
+    * run, q_stream_sessions ~2,000, a batch query ~0 — and fork cost
+    * of a many-GB JVM grows with RSS and host memory pressure, which is
+    * exactly the post-Verify driver-session amplification the pair
+    * showed in r13–r16. The checkpoint is explicit (under target/tmp,
+    * per query name), cleared BEFORE each run — a stale AvailableNow
+    * checkpoint would replay nothing and return an empty sink — and
+    * removed after the readout like the temporary checkpoint it replaces.
     */
   private[graft] def drain(df: DataFrame, name: String, mode: String,
                            stateWidth: Option[Int] = None): DataFrame = {

@@ -25,8 +25,4 @@ object Exprs {
     */
   def let(bound: Column)(body: Column => Column): Column =
     transform(array(bound), x => body(x)).getItem(0)
-
-  /** Two-variable form. */
-  def let2(a: Column, b: Column)(body: (Column, Column) => Column): Column =
-    let(a)(av => let(b)(bv => body(av, bv)))
 }

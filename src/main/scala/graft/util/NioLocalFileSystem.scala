@@ -18,12 +18,12 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Harmless per call — catastrophic multiplied by streaming state stores:
   * q_stream_join (32 partitions × 4 join state stores) measured ~6,500
   * fork+execs PER micro-batch through this path, q_stream_sessions
-  * ~2,000 (tools/ForkAudit reproduces per-op counts; tools/StackProfile
-  * caught `RawLocalFileSystem.setPermission → Shell → ProcessBuilder` on
-  * the executor hot path). Forking a many-GB-RSS JVM costs ~0.5–2 ms
-  * and degrades further under host memory pressure — which is exactly
-  * why the two corpus-keyed streaming faces amplified in post-Verify
-  * driver-session windows (the r16 verdict item-2 mechanism).
+  * ~2,000 (a stack profile caught `RawLocalFileSystem.setPermission →
+  * Shell → ProcessBuilder` on the executor hot path). Forking a
+  * many-GB-RSS JVM costs ~0.5–2 ms and degrades further under host
+  * memory pressure — which is exactly why the two corpus-keyed
+  * streaming faces amplified in post-Verify driver-session windows (the
+  * r16 verdict item-2 mechanism).
   *
   * This subclass keeps RawLocalFileSystem's data paths (streams, rename,
   * delete — none of which fork) and replaces the forking metadata ops

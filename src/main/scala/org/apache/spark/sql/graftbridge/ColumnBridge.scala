@@ -13,11 +13,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Drain the (private[spark]) async listener bus — dev tooling that reads
-    * listener-collected metrics on the main thread (tools.StageBench) must
-    * drain it before inspecting, or late stage-completed events are lost.
-    */
-  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
 }

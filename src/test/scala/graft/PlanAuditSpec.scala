@@ -296,8 +296,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("prefix Jaccard: rank window partitions by doc (no global sort); candidates shuffle as bare ids") {
-    val df = ops.Dedup.jaccardPrefixCandidatesLazy(
-      ops.Dedup.docShingles(spark, dir), ops.Dedup.JaccardThreshold)
+    val sh = ops.Dedup.docShingles(spark, dir)
+    val t = ops.Dedup.JaccardThreshold
+    val df = ops.Dedup.jaccardPrefixSelfJoin(ops.Dedup.jaccardPrefixIndex(sh, t), t)
     val plan = planOf(df)
     // the rank pass must be per-doc — an unpartitioned window would pull
     // the whole exploded shingle relation onto one reducer

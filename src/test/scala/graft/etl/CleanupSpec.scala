@@ -94,6 +94,10 @@ class CleanupSpec extends SparkSpec {
     assert(!res.partitionDrop)
     assert(res.deletedRows == 5)
     assert(spark.read.parquet(dir).count() == 5)
+    // exclusive bound: 01-05 < asOf − 4d = 01-06 is deleted, 01-06 is kept
+    val days = spark.read.parquet(dir).select(col("business_date").cast("string"))
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(days == (6 to 10).map(d => f"2024-01-$d%02d"))
     assert(!new java.io.File(dir + "_retained").exists(), "staging dir swapped away")
   }
 }

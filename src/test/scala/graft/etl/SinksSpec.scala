@@ -38,21 +38,6 @@ class SinksSpec extends SparkSpec {
     }
   }
 
-  test("retention rewrite keeps >= asOf-4d exclusively and partitions by date (daily_cleanup.py:23,30)") {
-    import spark.implicits._
-    val out = tmpDir("retention")
-    val df = (1 to 10).map(d => (f"2024-01-$d%02d", d)).toDF("business_date", "v")
-      .withColumn("business_date", to_date(col("business_date")))
-    val (kept, deleted) = Sinks.retentionRewrite(
-      df, "business_date", java.sql.Date.valueOf("2024-01-10"), out)
-    assert(kept == 5 && deleted == 5) // keeps 06..10; 05 < 06 is deleted (exclusive)
-    val days = spark.read.parquet(out).select("business_date").distinct()
-      .collect().map(_.getDate(0).toString).sorted
-    assert(days.head == "2024-01-06")
-    // partition-pruned layout on disk
-    assert(new java.io.File(out).listFiles().exists(_.getName.startsWith("business_date=")))
-  }
-
   test("retentionDropPartitions tolerates an empty expired partition dir (interrupted prior delete)") {
     import spark.implicits._
     val out = tmpDir("retentionempty") + "/t"
