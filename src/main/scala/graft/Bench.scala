@@ -78,8 +78,10 @@ object Bench {
     val it = queries.iterator
     while (it.hasNext && fatal.isEmpty) {
       val (name, run) = it.next()
-      // untimed per-query JIT-warm hook, ADJACENT to its timed consumer —
-      // see main's warm-set comment for why adjacency matters; failures
+      // untimed per-query JIT-warm hook, ADJACENT to its timed consumer
+      // (warm state decays as later queries churn C2-compiled methods and
+      // allocation-site profiles, so a warm pass belongs next to the run it
+      // warms, not in a block at the top of the suite); failures
       // are swallowed (a broken warm pass must surface as the timed
       // query's own loud failure, not mask it) EXCEPT a JVM-fatal error,
       // which gets the same flush-and-abort treatment as the timed path:
@@ -195,18 +197,17 @@ object Bench {
         .find(p => java.nio.file.Files.isReadable(p.resolve("build.sbt")))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Resolve the DEFAULT stall-reference name (r16 advice): the committed
-    * anchor lives at the repo root, but the default used to be
-    * CWD-relative — run from any other directory the parse warned on
-    * stderr and silently disabled stall transparency, the exact failure
-    * class `parseStallRef`'s own r16 comment documents (gauge_window.py
-    * got the script-relative `_REPO` fix that round; Bench did not).
-    * Order: the literal path when readable (the common run-from-repo-root
-    * case), else the same name under [[repoRoot]]. Explicit
-    * SPARK_GRAFT_STALL_REF overrides bypass this — parity experiments
-    * point at arbitrary files and must not be second-guessed. `cwd` is a
-    * parameter only so the spec can exercise the run-from-elsewhere
-    * branch (the JVM cannot chdir).
+  /** Resolve the stall-reference file name (r16 advice): the committed
+    * anchor lives at the repo root, but the lookup used to be CWD-relative
+    * — run from any other directory the parse warned on stderr and
+    * silently disabled stall transparency, the exact failure class
+    * `parseStallRef`'s own r16 comment documents (gauge_window.py got the
+    * script-relative `_REPO` fix that round; Bench did not). Order: the
+    * literal path when readable (the common run-from-repo-root case), else
+    * the same name under [[repoRoot]], else the name as given (which then
+    * parses empty, and main says so on stdout). `cwd` is a parameter only
+    * so the spec can exercise the run-from-elsewhere branch (the JVM cannot
+    * chdir).
     */
   private[graft] def resolveStallRefPath(
       name: String,
@@ -238,55 +239,28 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Size the generated-class cache to the WORKLOAD, not the 100-entry
-      // default: this suite compiles ~2,300 distinct janino classes, so at
-      // the default the cache thrashes — measured 3,560 total compiles
-      // (36% eviction-induced duplicates) and a fully-warmed query
-      // recompiling 48/50 of its classes after the suite churned past it
-      // (tools.CodegenChurn, r14). At 4096 entries the suite compiles each
-      // class once and warm passes stay valid for the whole run. This is
-      // the long-lived-application tuning, not a bench trick: a production
-      // driver serving hundreds of distinct plans sizes this cache exactly
-      // the same way (the conf is read once, at the JVM's first codegen —
-      // it must be set before any query). Semantics-neutral by
-      // construction: the cache keys on generated source text.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: absorb session/scheduler spin-up so it isn't billed
-    // to whichever query happens to run first
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    spark.catalog.clearCache()
+    val spark = SparkEntry.localSession(SparkEntry.localCpus)
     // Stage write-once artifacts untimed: the bucketed tables' clustering
     // write is the amortized-across-all-future-joins cost of the layout, not
     // part of any query — on a cold warehouse (the driver's fresh env) it
     // was billed to q_bucketed_join (11.3 s vs ~1.7 s, BENCH_r06), which is
-    // supposed to measure the zero-exchange join the layout buys.
-    try ops.Relational.stageBucketedTables(spark, sfDir)
-    catch { case _: Throwable => () }
-    try ops.Similarity.stageIvfIndex(spark, sfDir)
-    catch { case _: Throwable => () }
-    try ops.Similarity.stageKmeansCells(spark, sfDir)
-    catch { case _: Throwable => () }
-    try ops.Graph.stageCopurchaseEdges(spark, sfDir)
-    catch { case _: Throwable => () }
-    try ops.Similarity.stageKnnTruth(spark, sfDir)
-    catch { case _: Throwable => () }
-    try ops.Relational.stageCustomerBaskets(spark, sfDir)
-    catch { case _: Throwable => () }
-    try ops.Dedup.stageDocShingles(spark, sfDir)
-    catch { case _: Throwable => () }
-    try ops.Dedup.stageDedupPairs(spark, sfDir)
-    catch { case _: Throwable => () }
-    try ops.Dedup.stageSimhashFp(spark, sfDir)
-    catch { case _: Throwable => () }
+    // supposed to measure the zero-exchange join the layout buys. The zip
+    // and JSONL drops are the inputs q_zip_ingest / q_jsonl_ingest ingest,
+    // not part of the ingest. A stage that throws is skipped here; its
+    // consumer then stages inside its timed slot, or fails there loudly.
+    val stages: Seq[(SparkSession, String) => Unit] = Seq(
+      (s, d) => ops.Relational.stageBucketedTables(s, d),
+      (s, d) => ops.Similarity.stageIvfIndex(s, d),
+      (s, d) => ops.Similarity.stageKmeansCells(s, d),
+      (s, d) => ops.Graph.stageCopurchaseEdges(s, d),
+      (s, d) => ops.Similarity.stageKnnTruth(s, d),
+      (s, d) => ops.Relational.stageCustomerBaskets(s, d),
+      (s, d) => ops.Dedup.stageDocShingles(s, d),
+      (s, d) => ops.Dedup.stageDedupPairs(s, d),
+      (s, d) => ops.Dedup.stageSimhashFp(s, d),
+      (s, d) => ops.Ingestion.stageZip(s, d),
+      (s, d) => ops.Ingestion.stageJsonl(s, d))
+    stages.foreach(stage => try stage(spark, sfDir) catch { case _: Throwable => () })
     // GC barrier between the untimed staging writes and the FIRST timed
     // query: the staging passes above churn hundreds of MB of write-side
     // allocations, and q_allpairs_cosine (the alphabetical head) otherwise
@@ -294,99 +268,12 @@ object Bench {
     // 13.6 s-vs-3.8 s flap shape.
     spark.catalog.clearCache()
     System.gc()
-    // The JIT-warm set: queries whose pipelines compile janino/C2 code no
-    // other query reaches, so their first execution pays a cold-start that
-    // is not the query's own cost (q_triangles measured 13.9 s cold vs
-    // 6.7 s warm at sf0.1 fresh-JVM; q_stream_ks 8.5 s cold vs 3.8-5.2
-    // warm; q_knn_sq 4.5 cold vs 1.4-1.8 warm isolated triple, r14). Each
-    // gets one untimed sf0.001 pass of the SAME pipeline. Since r14 the
-    // pass runs ADJACENT to its timed consumer (the timeQueries preWarm
-    // hook), not in a block at the top of the run: warmed state decays —
-    // at the DEFAULT 100-entry generated-class cache the suite's ~2,300
-    // distinct classes churned a top-of-run warm pass out long before its
-    // consumer ran (tools.CodegenChurn measured a warmed q_stream_ks
-    // recompiling 48/50 classes after the churn — exactly the r13
-    // driver-window shape: its COLD 9.5 s × the 1.415 window ≈ the
-    // observed 14.7 s, three rounds running). The workload-sized cache
-    // below removes that specific decay, but adjacency stays: it also
-    // keeps C2-compiled methods and allocation-site profiles hot, costs
-    // nothing, and protects the warm passes if the cache is downsized via
-    // the env knob. q_stream_late joins (r13
-    // verdict item 2: same micro-batch-startup class; its sf0.001 pass
-    // also compiles the watermark/append-mode stateful codegen);
-    // q_stream_markov joins (the third member of the r13 contiguous
-    // streaming mover cluster); q_allpairs_cosine's old dedicated
-    // top-of-run pass (it is the first timed query, so adjacency == that
-    // position) is subsumed by its warmSet membership — one pass, not two.
-    // r15 additions: q_dedup_jaccard_prefix (isolated triple 11.71 cold /
-    // 5.47 / 4.92 warm — the 17.1 s driver flag was its OWN first-run
-    // compile+C2 cost × window, and the sf0.001 transfer pass cuts the
-    // sf0.1 cold 11.71→6.03); and the whole ANN-recall audit family
-    // (q_knn_recall / q_knn_sq_recall / q_knn_pq_recall / q_knn_ivf_pq) —
-    // a different member flapped each r14 run and q_knn_sq's own warm-set
-    // addition already proved the mechanism (back inside window; transfer
-    // measured: sq_recall 5.13 driver → 2.22 warm, knn_recall → 2.57).
-    // The r14 watch trio joins on the same evidence (isolated triples on
-    // this build): q_dedup_minhash_lsh 4.11 cold / 1.93 / 1.43 warm,
-    // q_ks_test 5.80 / 4.68 / 2.10, q_vocab_growth 3.28 / 1.70 / 1.43 —
-    // all warm at/near anchor, i.e. their driver elevations were first-run
-    // compile+C2 cost, the exact class the warm pass absorbs untimed.
-    // r16 addition: q_knn_rp_recall — the ONE recall-family member omitted
-    // in r15 (its four warmed siblings all came back inside the window; it
-    // alone flagged at 1.53x window-adjusted — r15 verdict item 4).
-    // r16 floor-class additions (verdict item 3 groundwork): the r15
-    // builder's 20-run minima probe found a class that never reads near
-    // anchor in ANY suite run; isolated triples on this build show every
-    // member warm AT/BELOW its anchor with a >=1 s cold-first-run gap —
-    // i.e. the in-suite elevation is their own first-run compile+C2 cost
-    // paid in the timed slot, the exact class the warm pass absorbs
-    // (cold -> sf0.001-transfer -> isolated-warm, seconds):
-    //   q_dedup_simhash    6.08 -> 2.81 -> 2.04 (anchor 2.05)
-    //   q_fixedwidth_parse 3.32 -> 2.65 -> 1.95 (anchor 2.64)
-    //   q_stream_dedup     5.29 -> 2.16 -> 2.30 (anchor 2.52)
-    //   q_stream_benford   3.81 -> 1.66 -> 1.71 (anchor 1.67)
-    //   q_stream_drift     3.06 -> 2.35 -> 2.27
-    //   q_stream_join      5.75 -> 5.05 -> 4.85 (residual vs its 3.39
-    //     anchor is the r13 file-sink drain hardening, structural)
-    //   q_df_incremental   2.36 -> 1.45 -> 1.29
-    //   q_bpe_merges       5.24 -> 3.88 -> 3.18 (the r13-r15 flap class)
-    // r17 addition (r16 verdict item 3, the explicit warm-vs-record
-    // decision): q_bpe_compression — isolated triple on this build
-    // 6.68 cold / 3.78 / 3.98 warm (r14 BenchSome read 7.13/3.08/3.37 at
-    // its 3.56 r12 anchor), in-suite 4.85-5.41 across every r16 run — the
-    // in-suite elevation is its own first-run compile+C2 cost paid in the
-    // timed slot, the exact class the adjacent sf0.001 pass absorbs; its
-    // sibling q_bpe_merges has been warmed since r16 on the same evidence.
-    // r18 additions, same evidence bar (isolated warm at/below anchor
-    // with a multi-second cold-first-run gap, in-suite stall retries at
-    // ~anchor): q_bm25_topk — triples 6.47/2.38/1.54 and
-    // 5.43/2.07/1.74/1.40/1.25 vs its 1.57 anchor; flagged in
-    // bench_r18_run2/run3 at timed 3.18/3.35 with retries 1.78/1.87
-    // (0.78-0.89x window-adjusted) — and q_kmeans — post-vecops triple
-    // 5.85/3.39/3.03; flagged in all three r18 baseline runs (timed
-    // 4.79/9.34/4.92) with retries 2.72/4.71/2.34 ≈ its 2.24 anchor.
-    // tools.WarmTransfer proves both warm passes compile 100% of the
-    // sf0.1 classes (0 new janino compiles at sf0.1 for q_kmeans; 4
-    // stage-regrouping classes for q_bm25_topk with identical post-AQE
-    // plan signatures at both scales).
-    val warmSet = Set("q_allpairs_cosine", "q_triangles", "q_pagerank",
-      "q_bfs_hops", "q_basket_triples", "q_stream_ks", "q_stream_late",
-      "q_stream_markov", "q_knn_sq", "q_dedup_jaccard_prefix",
-      "q_knn_recall", "q_knn_sq_recall", "q_knn_pq_recall", "q_knn_ivf_pq",
-      "q_knn_rp_recall",
-      "q_dedup_minhash_lsh", "q_ks_test", "q_vocab_growth",
-      "q_dedup_simhash", "q_fixedwidth_parse", "q_stream_dedup",
-      "q_stream_benford", "q_stream_drift", "q_stream_join",
-      "q_df_incremental", "q_bpe_merges", "q_bpe_compression",
-      "q_bm25_topk", "q_kmeans")
     // stall-transparency reference: the committed same-build per-query
-    // minimum composite (see timeQueries scaladoc); overridable so parity
-    // experiments can point at a different map. The default resolves
-    // against the repo root (resolveStallRefPath) and its absence is a
-    // LOUD stdout notice — a run without stall transparency must say so
-    // where the harness looks, not in a buried stderr warn (r16 advice).
-    val stallRefPath = sys.env.get("SPARK_GRAFT_STALL_REF")
-      .getOrElse(resolveStallRefPath("bench_anchor_r18.json"))
+    // minimum composite (see timeQueries scaladoc), resolved against the
+    // repo root (resolveStallRefPath). Its absence is a LOUD stdout notice
+    // — a run without stall transparency must say so where the harness
+    // looks, not in a buried stderr warn (r16 advice).
+    val stallRefPath = resolveStallRefPath("bench_anchor_r18.json")
     val stallRef = parseStallRef(stallRefPath)
     if (stallRef.isEmpty)
       println(s"BENCH NOTE: stall reference $stallRefPath yielded no entries" +
@@ -403,14 +290,16 @@ object Bench {
       // reclaim them; across 30+ queries in one context they squeeze
       // execution memory and late self-join queries degrade 5-10x.
       cleanup = () => { spark.catalog.clearCache(); System.gc() },
-      // try/finally (r14 advice): if the warm query throws non-fatally
+      // Every query gets one untimed sf0.001 pass of the SAME pipeline,
+      // adjacent to its timed run, so the timed number is steady state: the
+      // first-run janino compile and C2 warm-up are paid here, not in the
+      // slot. try/finally (r14 advice): if the warm query throws non-fatally
       // (swallowed by timeQueries), the clearCache must still run —
       // otherwise relations pinned by the partial warm pass survive into
-      // the timed sf0.1 measurement and skew it
-      preWarm = name => if (warmSet(name)) {
+      // the timed measurement and skew it
+      preWarm = name =>
         try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
-        finally spark.catalog.clearCache()
-      },
+        finally spark.catalog.clearCache(),
       stallRef = stallRef)
     val stealRun1 = stealJiffies()
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
@@ -447,7 +336,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")), fullLine + "\n")
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"WARN: bench_out.json write failed: $e") }
-    val budget = sys.env.getOrElse("SPARK_GRAFT_STDOUT_BUDGET", "1700").toInt
+    val budget = 1700
     val bySlowest = results.sortBy { case (k, v) => (-v, k) }
     val overhead = lineOf("{}").length + "\"rest\":12345.6789,\"omitted\":123".length
     var used = overhead

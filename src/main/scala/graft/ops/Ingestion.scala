@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.etl.{FixedWidth, Sources}
+import graft.util.Spread
 
 /** Oracle-checkable queries over the fixed-width ingestion core
   * (SURVEY.md §2.1–§2.3). The fixtures carry no POS file, so the pipeline is
@@ -68,16 +69,13 @@ object Ingestion {
     *
     * The format+parse projection collapses into the scan stage, whose
     * parallelism is the parquet row-group count (3 at sf0.1) — far below
-    * the session's cores. One narrow re-spread before the CPU-heavy
-    * projection fixes that; skipped when the source already has enough
-    * splits (the 100-TB case), where it would be a pure extra shuffle.
+    * the session's cores. One narrow re-spread ([[Spread.forCpu]]) before
+    * the CPU-heavy projection fixes that; skipped when the source already
+    * has enough splits (the 100-TB case), where it would be a pure extra
+    * shuffle.
     */
   def fixedWidthParse(spark: SparkSession, dir: String): DataFrame = {
-    val typed = lineitemTyped(spark, dir)
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val spread =
-      if (typed.rdd.getNumPartitions < parts) typed.repartition(parts) else typed
-    val recs = spread
+    val recs = Spread.forCpu(lineitemTyped(spark, dir))
       .withColumn("record", formatRecord(LineitemLayout))
       .select("record")
     parsedAgg(parseRecord(recs, "record", LineitemLayout))

@@ -145,14 +145,6 @@ object Relational {
       .orderBy("store_id", "business_date")
   }
 
-  /** Temp→final promotion (SP_Process_Daily_SKU_Data): the reference promotes
-    * newly parsed temp rows into the final table, idempotently (procs re-run
-    * per batch, SURVEY.md §2.11). Modeled as upsert = final ∪ (temp ⟕anti
-    * final) on the natural key; here "final" is the already-shipped half of
-    * lineitem and "temp" the rest, so the promotion is observable.
-    * At scale this is a MERGE on a transactional table; the anti-join is the
-    * engine-level semantics.
-    */
   /** Top-k: highest-revenue SKUs (sort + limit with deterministic
     * tie-break — the engine's order/limit surface, §2.7). Catalyst turns
     * this into a TakeOrderedAndProject: per-partition top-k, no full sort.
@@ -769,6 +761,14 @@ object Relational {
        |FROM e JOIN b USING (event_type)
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** Temp→final promotion (SP_Process_Daily_SKU_Data): the reference promotes
+    * newly parsed temp rows into the final table, idempotently (procs re-run
+    * per batch, SURVEY.md §2.11). Modeled as upsert = final ∪ (temp ⟕anti
+    * final) on the natural key; here "final" is the already-shipped half of
+    * lineitem and "temp" the rest, so the promotion is observable.
+    * At scale this is a MERGE on a transactional table; the anti-join is the
+    * engine-level semantics.
+    */
   def tempFinalPromotion(spark: SparkSession, dir: String): DataFrame = {
     val l = Tables.lineitem(spark, dir)
     val cutoff = lit("1998-01-01").cast("date")

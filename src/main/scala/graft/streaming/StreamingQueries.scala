@@ -477,15 +477,23 @@ object StreamingQueries {
           // streaming queries keep running on the pool threads
           // (shutdown() does not cancel running tasks) and would continue
           // writing sinks/checkpoints after this method has exited. Stop
-          // them by name and wait for the pool to wind down so no drain
-          // outlives the call (the next invocation's stop-by-name + rm
-          // guard remains a backstop, not the contract).
-          names.foreach { n =>
+          // them by name and wait for the pool to wind down — best effort
+          // only: a sibling that has not yet registered its named query
+          // escapes the sweep. The next invocation's stop-by-name + rm
+          // guard is the contract.
+          def stopByName(): Unit = names.foreach { n =>
             spark.streams.active.filter(q => Option(q.name).contains(n))
               .foreach(q => try q.stop() catch { case _: Throwable => () })
           }
+          stopByName()
           pool.shutdown()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+          if (!pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)) {
+            System.err.println("STREAM DQ DRAIN TIMEOUT: a sibling drain of " +
+              names.mkString(", ") + " outlived the 60 s wait after " + e +
+              " — re-running the stop-by-name sweep once; a drain may still " +
+              "be writing its sink/checkpoint")
+            stopByName()
+          }
           throw e
       } finally pool.shutdown()
     val checks = rowLocal.crossJoin(fk).crossJoin(temporal).select(expr(
