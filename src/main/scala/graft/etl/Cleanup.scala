@@ -29,12 +29,8 @@ object Cleanup {
                           seconds: Double, partitionDrop: Boolean)
 
   /** True if `tableDir` is laid out `dateCol=YYYY-MM-DD/…`. */
-  def isDatePartitioned(spark: SparkSession, tableDir: String, dateCol: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith(dateCol + "="))
-  }
+  def isDatePartitioned(spark: SparkSession, tableDir: String, dateCol: String): Boolean =
+    Sinks.datePartitions(spark, tableDir, dateCol).nonEmpty
 
   /** Data-derived `asOf` (max business date present). On a partitioned
     * table the max comes from the partition DIRECTORY NAMES — no data files
@@ -46,20 +42,10 @@ object Cleanup {
   def deriveAsOf(spark: SparkSession, tableDir: String, dateCol: String,
                  partitioned: Boolean): java.sql.Date =
     if (partitioned) {
-      val p = new org.apache.hadoop.fs.Path(tableDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prefix = dateCol + "="
-      val dates = fs.listStatus(p).iterator
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.startsWith(prefix))
-        .map(_.stripPrefix(prefix))
-        .filter(v => scala.util.Try(java.time.LocalDate.parse(v)).isSuccess)
-        .toSeq
+      val dates = Sinks.datePartitions(spark, tableDir, dateCol).flatMap(_._2)
       require(dates.nonEmpty,
-        s"cannot derive asOf: no $prefix<date> partitions under $tableDir")
-      // ISO dates order lexicographically == chronologically
-      java.sql.Date.valueOf(dates.max)
+        s"cannot derive asOf: no $dateCol=<date> partitions under $tableDir")
+      java.sql.Date.valueOf(dates.maxBy(_.toEpochDay))
     } else {
       // collect the max date as an ISO string, not java.sql.Date — the
       // driver-side date row decode (`toJavaDate`) is JVM-sensitive

@@ -16,8 +16,9 @@ import graft.util.Retry
   *  3. T1  fixed-width explode (custom Generator; short tail kept)
   *  4. parse  positional field-spec → typed rows (SP_…_Temp reconstruction)
   *  5. land  typed rows → date-partitioned parquet "temp" landing zone
-  *     (stand-in for the raw JDBC table; `Sinks.jdbcWriter` is the
-  *     batchsize-150 JDBC path when a database is configured)
+  *     (stand-in for the raw JDBC table; no setting selects a database —
+  *     `Sinks.jdbcWriter` is the batchsize-150 JDBC writer a database
+  *     landing would call instead)
   *  6. promote  temp → final via anti-join upsert on the natural key —
   *     idempotent like the per-batch proc loop (§2.11)
   *  7. aggregate  daily SKU / sales rollups from the final table
@@ -66,23 +67,21 @@ object DailyIngest {
           poster: Map[String, String] => Boolean = _ => true): Notify.RunMetrics = {
     val lay = Layout(workDir)
     val t0 = System.nanoTime()
-    val fileName = Sources.dailyFile(spark, inputDir, date)
+    var file = "<none>" // named in the failure payload until the lookup finds one
     try {
-      val file = fileName.getOrElse(
+      file = Sources.dailyFile(spark, inputDir, date).getOrElse(
         throw new IllegalStateException(s"no daily file for $date under $inputDir"))
 
       // 2-4: read → explode → parse (observe rows/bytes on the record stream)
-      val obs = org.apache.spark.sql.Observation("daily_ingest_" + System.nanoTime())
       val txt = Sources.readZipText(spark, file)
         .withColumn("business_date", Sources.filenameDate(col("path")))
-      val records = explodeFixedWidth(txt, "text")
-        .observe(obs, count(lit(1)).as("n_rows"),
-                 sum(octet_length(col("record"))).as("n_bytes"))
+      val (records, rowsBytes) = Notify.observed(explodeFixedWidth(txt, "text"), "record")
       val typed = parseRecord(records, "record", LineitemLayout,
                               keep = Seq("business_date"))
 
-      // 5: land temp (date-partitioned; JDBC raw landing would be
-      //    Sinks.jdbcWriter(packed, url, table) — see SinksSpec Derby test)
+      // 5: land temp (parquet always; a JDBC raw landing would replace this
+      //    write with Sinks.jdbcWriter(typed, url, table) — see SinksSpec's
+      //    Derby test)
       Retry.withBackoff() {
         typed.write.mode(SaveMode.Overwrite).parquet(lay.temp)
       }
@@ -123,15 +122,14 @@ object DailyIngest {
       Sinks.archiveFile(spark, file, lay.archive)
 
       // 10: notify success with observed metrics
-      val row = obs.get
+      val (rows, bytes) = rowsBytes()
       val m = Notify.RunMetrics(file.split("/").last, isFileFailed = false, "",
-        row("n_rows").asInstanceOf[Long], row("n_bytes").asInstanceOf[Long],
-        (System.nanoTime() - t0) / 1e9, slaSeconds = SlaSeconds)
+        rows, bytes, (System.nanoTime() - t0) / 1e9, slaSeconds = SlaSeconds)
       Notify.notify(m, "graft@local", "ops@local")(poster)
       m
     } catch {
       case scala.util.control.NonFatal(e) =>
-        val m = Notify.RunMetrics(fileName.getOrElse("<none>").split("/").last,
+        val m = Notify.RunMetrics(file.split("/").last,
           isFileFailed = true, String.valueOf(e.getMessage), 0L, 0L,
           (System.nanoTime() - t0) / 1e9, slaSeconds = SlaSeconds)
         Notify.notify(m, "graft@local", "ops@local")(poster)

@@ -82,10 +82,25 @@ object FixedWidth {
   val WindowMaxRowsPerKey = 2000000L
 
   /** T3: order-preserving pack of `n` consecutive records into one string
-    * row per (`partCols`, group). Ordering is explicit over `orderCols` —
-    * never implicit row order (SURVEY.md §7.5) — and the in-group concat
-    * sorts a (rn, record) struct array, so the result is deterministic under
-    * any partitioning. Final partial group is emitted (main.py:421-423).
+    * row `packed` per (`partCols`, `pack_id`). Ordering is explicit over
+    * `orderCols` — never implicit row order (SURVEY.md §7.5) — and the
+    * in-group concat sorts a (rn, record) struct array, so the result is
+    * deterministic under any partitioning. Final partial group is emitted
+    * (main.py:421-423).
+    *
+    * The record is an EXPRESSION, not a column name — the
+    * late-materialization form. Placement is the point: a caller that
+    * materializes a derived record (e.g. [[formatRecord]] over typed
+    * columns) with `withColumn` before packing hands Catalyst a Project at
+    * the SCAN, so the wide strings are built at source parallelism (=
+    * parquet row-group count, often tiny) and then shipped through BOTH
+    * pack exchanges. Passing the expression here instead evaluates it
+    * inside the aggregation — which sits ABOVE the pinned pre-agg
+    * repartition — so every shuffle moves only the narrow typed columns and
+    * the wide strings first exist in the final, fully-parallel stage.
+    * Measured at sf0.1: the scan-stage exchange drops 36.6→5 MB and the
+    * roundtrip's format CPU moves from 3 row-group-bound tasks onto all 32
+    * slots.
     *
     * Path selection is ADAPTIVE on measured data, the same way Spark picks
     * broadcast vs shuffle joins: one narrow column-pruned job counts rows
@@ -94,56 +109,26 @@ object FixedWidth {
     * reducer's sort — otherwise the cheaper single-shuffle window form.
     * The probe is one extra narrow job on every call (~0.3 s at sf0.1,
     * measured in q_pack_stats vs a direct packWindow call) — the price of
-    * never letting a hot key reach an unsortable single reducer. Callers
-    * that already know their key distribution can call
-    * [[packWindow]]/[[packScalable]] directly and skip it. (A non-numeric
-    * leading order column always takes the window form — quantile
-    * bucketing needs a numeric column.)
+    * never letting a hot key reach an unsortable single reducer. (A
+    * non-numeric leading order column always takes the window form —
+    * quantile bucketing needs a numeric column.)
     */
-  def pack(df: DataFrame, recCol: String,
+  def pack(df: DataFrame, record: Column,
            partCols: Seq[String], orderCols: Seq[String],
-           n: Int = PackFactor,
-           packedOut: String = "packed", grpOut: String = "pack_id",
-           windowMaxRowsPerKey: Long = WindowMaxRowsPerKey): DataFrame =
-    packOf(df, col(recCol), partCols, orderCols, n, packedOut, grpOut,
-           windowMaxRowsPerKey)
-
-  /** [[pack]] with the record as an EXPRESSION instead of a materialized
-    * column — the late-materialization form, and the one to prefer when the
-    * record is derived (e.g. [[formatRecord]] over typed columns).
-    *
-    * Placement is the point: a caller that materializes the record with
-    * `withColumn` before packing hands Catalyst a Project at the SCAN, so
-    * the wide strings are built at source parallelism (= parquet row-group
-    * count, often tiny) and then shipped through BOTH pack exchanges.
-    * Passing the expression here instead evaluates it inside the
-    * aggregation — which sits ABOVE the pinned pre-agg repartition — so
-    * every shuffle moves only the narrow typed columns and the wide strings
-    * first exist in the final, fully-parallel stage. Measured at sf0.1:
-    * the scan-stage exchange drops 36.6→5 MB and the roundtrip's format CPU
-    * moves from 3 row-group-bound tasks onto all 32 slots.
-    */
-  def packOf(df: DataFrame, record: Column,
-             partCols: Seq[String], orderCols: Seq[String],
-             n: Int = PackFactor,
-             packedOut: String = "packed", grpOut: String = "pack_id",
-             windowMaxRowsPerKey: Long = WindowMaxRowsPerKey): DataFrame = {
+           n: Int = PackFactor): DataFrame = {
     val numericOrd = df.schema(orderCols.head).dataType
       .isInstanceOf[org.apache.spark.sql.types.NumericType]
-    if (!numericOrd)
-      // quantile bucketing needs a numeric leading order column
-      packWindowOf(df, record, partCols, orderCols, n, packedOut, grpOut)
-    else {
-      val maxKeyRows = df.groupBy(partCols.map(col): _*).count()
+    val maxKeyRows =
+      if (!numericOrd) 0L
+      else df.groupBy(partCols.map(col): _*).count()
         .agg(max(col("count"))).head() match {
           case r if r.isNullAt(0) => 0L
           case r                  => r.getLong(0)
         }
-      if (maxKeyRows > windowMaxRowsPerKey)
-        packScalableOf(df, record, partCols, orderCols, n, packedOut, grpOut)
-      else
-        packWindowOf(df, record, partCols, orderCols, n, packedOut, grpOut)
-    }
+    if (maxKeyRows > WindowMaxRowsPerKey)
+      packScalable(df, record, partCols, orderCols, n)
+    else
+      packWindow(df, record, partCols, orderCols, n)
   }
 
   /** T3 small-input path: `row_number` over a per-key window. One shuffle,
@@ -151,131 +136,65 @@ object FixedWidth {
     * while every key fits one executor's sort, a ceiling at scale (which is
     * why [[pack]] switches to [[packScalable]] past [[WindowMaxRowsPerKey]]).
     */
-  def packWindow(df: DataFrame, recCol: String,
-                 partCols: Seq[String], orderCols: Seq[String],
-                 n: Int = PackFactor,
-                 packedOut: String = "packed", grpOut: String = "pack_id"): DataFrame =
-    packWindowOf(df, col(recCol), partCols, orderCols, n, packedOut, grpOut)
-
-  /** [[packWindow]] over a record expression (see [[packOf]] for why the
-    * expression form shuffles narrow).
-    */
-  def packWindowOf(df: DataFrame, record: Column,
-                   partCols: Seq[String], orderCols: Seq[String],
-                   n: Int = PackFactor,
-                   packedOut: String = "packed", grpOut: String = "pack_id"): DataFrame = {
+  private[graft] def packWindow(df: DataFrame, record: Column,
+                                partCols: Seq[String], orderCols: Seq[String],
+                                n: Int = PackFactor): DataFrame = {
     val w = Window.partitionBy(partCols.map(col): _*).orderBy(orderCols.map(col): _*)
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    df.withColumn("_rn", row_number().over(w).cast("long") - 1)
-      .withColumn(grpOut, (col("_rn") / n).cast("long"))
-      // pinned pre-agg repartition — see packScalable: keeps the packed
-      // output at full partition count for fan-out consumers. It also makes
-      // the groupBy's distribution requirement already satisfied, so BOTH
-      // halves of the aggregation (and `record`'s evaluation inside it)
-      // run post-exchange at full width.
-      .repartition(parts, (partCols :+ grpOut).map(col): _*)
-      .groupBy((partCols :+ grpOut).map(col): _*)
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("_rn"), record.as("_r")))),
-                  x => x.getField("_r")),
-        "").as(packedOut))
+    orderedConcat(df.withColumn("_rn", row_number().over(w).cast("long") - 1),
+                  record, partCols, n)
   }
 
-  /** T3 alternative: typed `Aggregator` for the ordered concat — the
-    * SURVEY §7.3 form. Buffers (rn, record) pairs, merges partial buffers
-    * from any partitioning, sorts once at `finish`. Registered as a UDAF so
-    * it composes with groupBy like any built-in; equivalent to the
-    * collect_list+array_sort idiom (see FixedWidthSpec equivalence test)
-    * but without building the intermediate struct array per input row.
-    */
-  object OrderedConcat extends org.apache.spark.sql.expressions.Aggregator[
-      (Long, String), List[(Long, String)], String] {
-    override def zero: List[(Long, String)] = Nil
-    override def reduce(b: List[(Long, String)], a: (Long, String)): List[(Long, String)] = a :: b
-    override def merge(x: List[(Long, String)], y: List[(Long, String)]): List[(Long, String)] = x ::: y
-    override def finish(b: List[(Long, String)]): String = {
-      val arr = b.toArray.sortBy(_._1)
-      val sb = new java.lang.StringBuilder(arr.iterator.map(_._2.length).sum)
-      arr.foreach(p => sb.append(p._2))
-      sb.toString
-    }
-    override def bufferEncoder: org.apache.spark.sql.Encoder[List[(Long, String)]] =
-      org.apache.spark.sql.Encoders.kryo[List[(Long, String)]]
-    override def outputEncoder: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-  }
-
-  /** [[pack]] built on [[OrderedConcat]]: same grouping and ordering rule,
-    * typed aggregation instead of collect_list+array_sort.
-    */
-  def packTyped(df: DataFrame, recCol: String,
-                partCols: Seq[String], orderCols: Seq[String],
-                n: Int = PackFactor,
-                packedOut: String = "packed", grpOut: String = "pack_id"): DataFrame = {
-    val w = Window.partitionBy(partCols.map(col): _*).orderBy(orderCols.map(col): _*)
-    val agg = udaf(OrderedConcat)
-    df.withColumn("_rn", row_number().over(w).cast("long") - 1)
-      .withColumn(grpOut, (col("_rn") / n).cast("long"))
-      .groupBy((partCols :+ grpOut).map(col): _*)
-      .agg(agg(col("_rn"), col(recCol)).as(packedOut))
-  }
-
-  /** T3 scale path (the default behind [[pack]] for numeric leading order
-    * columns): the same global per-key row numbers as the window form,
-    * computed with full parallelism and entirely on Tungsten rows — and
-    * with the same number of full-data shuffles as the window form (one
-    * clustering shuffle + the concat-agg shuffle), so the parallelism is
-    * not bought with extra passes over the records.
+  /** T3 scale path (behind [[pack]] once a key outgrows the window form):
+    * the same global per-key row numbers as the window form, computed with
+    * full parallelism and entirely on Tungsten rows — and with the same
+    * number of full-data shuffles as the window form (one clustering
+    * shuffle + the concat-agg shuffle), so the parallelism is not bought
+    * with extra passes over the records.
     *
     * The row numbers come from the shared two-phase prefix-sum scaffold
     * ([[graft.plans.PrefixSum]] — quantile bucketing, driver-prefixed
     * per-run offsets, run-contiguous clustering, stateful codegen'd
     * accumulation) applied to value = 1: `row_number() − 1` IS the
-    * exclusive running count of prior rows. The record column prunes away
-    * from both of the scaffold's narrow pre-jobs.
+    * exclusive running count of prior rows. The record's source columns
+    * prune away from both of the scaffold's narrow pre-jobs.
     *
     * Output is identical to [[packWindow]] (equivalence-tested in
     * FixedWidthSpec) because (partCols, orderCols) is a total order. Part
-    * keys must be non-null and `df` deterministic (both hold for the
-    * reference's fixed-width records, main.py:414-423).
+    * keys must be non-null, the leading order column numeric and `df`
+    * deterministic (all hold for the reference's fixed-width records,
+    * main.py:414-423).
     */
-  def packScalable(df: DataFrame, recCol: String,
-                   partCols: Seq[String], orderCols: Seq[String],
-                   n: Int = PackFactor,
-                   packedOut: String = "packed", grpOut: String = "pack_id",
-                   numParts: Int = 0): DataFrame =
-    packScalableOf(df, col(recCol), partCols, orderCols, n, packedOut, grpOut,
-                   numParts)
+  private[graft] def packScalable(df: DataFrame, record: Column,
+                                  partCols: Seq[String], orderCols: Seq[String],
+                                  n: Int = PackFactor): DataFrame =
+    orderedConcat(
+      graft.plans.PrefixSum.exclusiveRunningSum(df, lit(1L), partCols, orderCols, out = "_rn"),
+      record, partCols, n)
 
-  /** [[packScalable]] over a record expression (see [[packOf]] for why the
-    * expression form shuffles narrow).
+  /** The ordered-concat tail both pack paths share: `_rn` (0-based per-key
+    * row number) → `pack_id` = rn / n, then one concat per (partCols,
+    * pack_id) that sorts its (rn, record) pairs.
+    *
+    * The pinned pre-agg repartition satisfies the aggregation's required
+    * distribution (so the planner inserts no second exchange) while
+    * pinning the partition count — AQE would otherwise coalesce the agg
+    * output to a handful of byte-sized partitions, starving downstream
+    * fan-out consumers (a 1000x explode) of parallelism. Both halves of the
+    * aggregation (and `record`'s evaluation inside it) run post-exchange at
+    * full width; partial aggregation loses nothing, since ordered concat
+    * cannot shrink bytes map-side anyway.
     */
-  def packScalableOf(df: DataFrame, record: Column,
-                     partCols: Seq[String], orderCols: Seq[String],
-                     n: Int = PackFactor,
-                     packedOut: String = "packed", grpOut: String = "pack_id",
-                     numParts: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val parts =
-      if (numParts > 0) numParts else spark.sessionState.conf.numShufflePartitions
-    graft.plans.PrefixSum.exclusiveRunningSum(
-        df, lit(1L), partCols, orderCols, out = "_rn", numParts = parts)
-      .withColumn(grpOut, (col("_rn") / n).cast("long"))
-      // pinned pre-agg repartition: satisfies the aggregation's required
-      // distribution (so the planner inserts no second exchange) while
-      // pinning the partition count — AQE would otherwise coalesce the agg
-      // output to a handful of byte-sized partitions, starving downstream
-      // fan-out consumers (a 1000x explode) of parallelism. Partial
-      // aggregation loses nothing here: ordered concat cannot shrink bytes
-      // map-side anyway.
-      .repartition(parts, (partCols :+ grpOut).map(col): _*)
-      .groupBy((partCols :+ grpOut).map(col): _*)
+  private def orderedConcat(numbered: DataFrame, record: Column,
+                            partCols: Seq[String], n: Int): DataFrame = {
+    val keys = (partCols :+ "pack_id").map(col)
+    numbered.withColumn("pack_id", (col("_rn") / n).cast("long"))
+      .repartition(numbered.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
+      .groupBy(keys: _*)
       .agg(array_join(
         transform(array_sort(collect_list(struct(col("_rn"), record.as("_r")))),
                   x => x.getField("_r")),
-        "").as(packedOut))
+        "").as("packed"))
   }
-
 
   /** Positional field layout: `start` is 0-based char offset. `kind` is one
     * of "long" (zero-padded), "str" (space right-padded), "date" (yyyyMMdd).

@@ -40,25 +40,19 @@ object Notify {
   }
 
   /** Attach observed metrics to a DataFrame: row count + UTF-8 payload
-    * bytes of `payloadCol` (T6/T7 — the reference's running totals).
-    * Read them back from the `observe` listener or [[metricsOf]].
+    * bytes of `payloadCol` (T6/T7 — the reference's running totals),
+    * collected during whatever action runs the returned DataFrame. The
+    * returned reader waits for that action and yields (rows, bytes).
     */
-  def observed(df: DataFrame, payloadCol: String, name: String = "graft_metrics"): DataFrame =
-    df.observe(name,
+  def observed(df: DataFrame, payloadCol: String): (DataFrame, () => (Long, Long)) = {
+    val obs = org.apache.spark.sql.Observation("graft_metrics_" + System.nanoTime())
+    val out = df.observe(obs,
       count(lit(1)).as("n_rows"),
       sum(octet_length(col(payloadCol))).as("n_bytes"))
-
-  /** Run a counting action and harvest the observed metrics synchronously
-    * (rows, payload bytes) via the `Observation` listener.
-    */
-  def metricsOf(df: DataFrame, payloadCol: String): (Long, Long) = {
-    val obs = org.apache.spark.sql.Observation("graft_metrics_" + System.nanoTime())
-    df.observe(obs,
-        count(lit(1)).as("n_rows"),
-        sum(octet_length(col(payloadCol))).as("n_bytes"))
-      .write.format("noop").mode("overwrite").save()
-    val row = obs.get
-    (row("n_rows").asInstanceOf[Long], row("n_bytes").asInstanceOf[Long])
+    (out, () => {
+      val row = obs.get
+      (row("n_rows").asInstanceOf[Long], row("n_bytes").asInstanceOf[Long])
+    })
   }
 
   /** The notification payload (email_sender.py:32-78 shape): subject picks

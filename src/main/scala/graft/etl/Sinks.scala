@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -145,19 +145,47 @@ object Sinks {
     if (dstP.getParent == null) new Path("." + dstP.getName + "_old")
     else new Path(dstP.getParent, "." + dstP.getName + "_old")
 
+  /** The crash-leftover rule for an aside `.<base>_old` ([[asidePath]]):
+    * beside a live `base` it is stale from a completed swap and is
+    * deleted; with `base` missing the prior run crashed between the two
+    * swap renames, the aside is the ONLY live copy, and it is renamed back.
+    */
+  private def settleAside(fs: FileSystem, aside: Path, base: Path): Unit =
+    if (fs.exists(base)) fs.delete(aside, true)
+    else require(fs.rename(aside, base), s"recover $aside -> $base failed")
+
+  /** The `dateCol=` directories directly under `tableDir`, each with its
+    * ISO date when the value parses; empty when `tableDir` is missing.
+    */
+  private[etl] def datePartitions(spark: SparkSession, tableDir: String,
+                                  dateCol: String): Seq[(Path, Option[java.time.LocalDate])] = {
+    val root = new Path(tableDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefix = dateCol + "="
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .map { s =>
+        val v = s.getPath.getName.stripPrefix(prefix)
+        (s.getPath, scala.util.Try(java.time.LocalDate.parse(v)).toOption)
+      }
+  }
+
+  /** A parquet data file: non-empty, not `_`/`.`-prefixed (markers, CRCs). */
+  private def isDataFile(f: FileStatus): Boolean = {
+    val n = f.getPath.getName
+    f.isFile && f.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+  }
+
   /** Directory swap that never deletes the only live copy: rename the
     * current `dst` aside to `.<dst>_old` ([[asidePath]]), rename `src` into
     * place, then drop the old copy. A crash mid-swap leaves the data
     * recoverable under the aside or `src` (a delete-then-rename swap has a
     * window where the production table simply vanishes).
     *
-    * Leftover aside handling is state-dependent: if `dst` exists, the aside
-    * is stale from a prior completed swap and is cleared; if `dst` is
-    * MISSING, the prior run crashed between rename(dst→aside) and
-    * rename(src→dst) — the aside is the ONLY live copy and is renamed back
-    * into place (recovered) before this swap proceeds. Deleting it
-    * unconditionally would silently lose the table in exactly that crash
-    * window.
+    * A leftover aside from a prior run is settled first ([[settleAside]]):
+    * deleting it unconditionally would silently lose the table when that
+    * run crashed between the two renames.
     */
   def replaceDir(spark: SparkSession, src: String, dst: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -165,11 +193,7 @@ object Sinks {
     val dstP = new Path(dst)
     val oldP = asidePath(dstP)
     val fs = srcP.getFileSystem(conf)
-    if (fs.exists(oldP)) {
-      if (fs.exists(dstP)) fs.delete(oldP, true) // prior swap completed: stale
-      else require(fs.rename(oldP, dstP),        // crash window: recover
-        s"recover $oldP -> $dst failed")
-    }
+    if (fs.exists(oldP)) settleAside(fs, oldP, dstP)
     // validate the source BEFORE moving dst aside — otherwise a missing src
     // would strand the live table under `_old` (the very window recovered
     // above)
@@ -188,10 +212,8 @@ object Sinks {
     * (read -> coalesce to ceil(bytes/targetBytes) files -> staged dir ->
     * atomic [[replaceDir]] swap); compliant partitions are NEVER read or
     * touched, so cost is O(fragmented data) only, and a crash mid-compact
-    * loses nothing: entry first sweeps crash leftovers — a `.<part>_old`
-    * aside whose base partition is missing is the only live copy (crash
-    * between the two swap renames) and is renamed back; a stale aside
-    * beside a live partition and any orphaned staged dir are cleared.
+    * loses nothing: entry first settles every `.<part>_old` aside
+    * ([[settleAside]]) and clears any orphaned staged dir.
     * Returns (partitionsCompacted, filesBefore, filesAfter).
     *
     * Concurrency: run under the table's single-flight lock
@@ -213,37 +235,27 @@ object Sinks {
     // them mid-swap; the sweep matches that naming
     fs.listStatus(root).iterator.filter(_.isDirectory).foreach { s =>
       val n = s.getPath.getName
-      if (n.startsWith("." + prefix) && n.endsWith("_old")) {
-        val base = new Path(root, n.stripPrefix(".").stripSuffix("_old"))
-        if (!fs.exists(base)) require(fs.rename(s.getPath, base),
-          s"recover ${s.getPath} -> $base failed") // only live copy
-        else fs.delete(s.getPath, true)            // stale from completed swap
-      } else if (n.startsWith("." + prefix) && n.endsWith("_compact")) {
-        fs.delete(s.getPath, true)                 // orphaned staging copy
-      }
+      if (n.startsWith("." + prefix) && n.endsWith("_old"))
+        settleAside(fs, s.getPath, new Path(root, n.stripPrefix(".").stripSuffix("_old")))
+      else if (n.startsWith("." + prefix) && n.endsWith("_compact"))
+        fs.delete(s.getPath, true) // orphaned staging copy
     }
     var compacted = 0L; var before = 0L; var after = 0L
-    fs.listStatus(root).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .foreach { part =>
-        val dataFiles = fs.listStatus(part.getPath).filter { f =>
-          val n = f.getPath.getName
-          f.isFile && f.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-        }
-        if (dataFiles.length > maxFiles) {
-          val bytes = dataFiles.map(_.getLen).sum
-          val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-          val staged = new Path(part.getPath.getParent,
-            "." + part.getPath.getName + "_compact")
-          spark.read.parquet(part.getPath.toString)
-            .repartition(nOut)
-            .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-          replaceDir(spark, staged.toString, part.getPath.toString)
-          compacted += 1
-          before += dataFiles.length
-          after += nOut
-        }
+    datePartitions(spark, tableDir, dateCol).foreach { case (part, _) =>
+      val dataFiles = fs.listStatus(part).filter(isDataFile)
+      if (dataFiles.length > maxFiles) {
+        val bytes = dataFiles.map(_.getLen).sum
+        val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+        val staged = new Path(part.getParent, "." + part.getName + "_compact")
+        spark.read.parquet(part.toString)
+          .repartition(nOut)
+          .write.mode(SaveMode.Overwrite).parquet(staged.toString)
+        replaceDir(spark, staged.toString, part.toString)
+        compacted += 1
+        before += dataFiles.length
+        after += nOut
       }
+    }
     (compacted, before, after)
   }
 
@@ -260,21 +272,10 @@ object Sinks {
                               dateCol: String, asOf: java.sql.Date,
                               days: Int = 4): (Long, Long) = {
     val cutoff = asOf.toLocalDate.minusDays(days)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(tableDir)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return (0L, 0L)
-    val prefix = dateCol + "="
-    val expired = fs.listStatus(root).iterator
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-      .filter { p =>
-        val v = p.getName.stripPrefix(prefix)
-        scala.util.Try(java.time.LocalDate.parse(v)).toOption.exists(_.isBefore(cutoff))
-      }
-      .toSeq
+    val expired = datePartitions(spark, tableDir, dateCol)
+      .collect { case (p, Some(d)) if d.isBefore(cutoff) => p }
     if (expired.isEmpty) return (0L, 0L)
+    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // An expired dir may hold no data files (leftover of a previously
     // interrupted delete); including it in the counting read throws
     // "unable to infer schema" and would wedge every later cleanup run.
@@ -282,11 +283,7 @@ object Sinks {
     def hasDataFiles(p: Path): Boolean = {
       val it = fs.listFiles(p, true)
       var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        val n = f.getPath.getName
-        found = f.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-      }
+      while (!found && it.hasNext) found = isDataFile(it.next())
       found
     }
     val withData = expired.filter(hasDataFiles)

@@ -86,7 +86,7 @@ object Ingestion {
     * main.py:414-423 semantics incl. final partial group).
     */
   def packStats(spark: SparkSession, dir: String): DataFrame =
-    pack(lineitemRecords(spark, dir), "record",
+    pack(lineitemRecords(spark, dir), col("record"),
          partCols = Seq("f_returnflag"),
          orderCols = Seq("f_orderkey", "f_linenumber"))
       .groupBy(col("f_returnflag").as("returnflag"))
@@ -112,7 +112,7 @@ object Ingestion {
     * bench). Same semantics, same oracle as q_pack_stats.
     */
   def packScalableStats(spark: SparkSession, dir: String): DataFrame =
-    FixedWidth.packScalable(lineitemRecords(spark, dir), "record",
+    FixedWidth.packScalable(lineitemRecords(spark, dir), col("record"),
         partCols = Seq("f_returnflag"),
         orderCols = Seq("f_orderkey", "f_linenumber"))
       .groupBy(col("f_returnflag").as("returnflag"))
@@ -132,14 +132,12 @@ object Ingestion {
     * unfused declarative parse stays benched via q_fixedwidth_parse.
     */
   def packExplodeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    // packOf (not pack over a pre-formatted column): the 520-char record is
-    // materialized INSIDE the post-repartition aggregation, so both pack
+    // the record expression, not a pre-formatted column: both pack
     // exchanges ship narrow typed rows and the format CPU runs at full
-    // width instead of at parquet row-group parallelism — the sf0.1
-    // roundtrip's scan-stage shuffle drops 36.6→5 MB (see packOf scaladoc).
-    val packed = packOf(lineitemTyped(spark, dir), formatRecord(LineitemLayout),
-                        partCols = Seq("f_returnflag"),
-                        orderCols = Seq("f_orderkey", "f_linenumber"))
+    // width (see pack's scaladoc; the sf0.1 scan-stage shuffle 36.6→5 MB)
+    val packed = pack(lineitemTyped(spark, dir), formatRecord(LineitemLayout),
+                      partCols = Seq("f_returnflag"),
+                      orderCols = Seq("f_orderkey", "f_linenumber"))
     // No re-spread needed before the 1000x explode fan-out: pack pins its
     // output partition count (pinned pre-agg repartition in FixedWidth),
     // so AQE cannot coalesce the 520 KB-row packed table down to a handful

@@ -41,7 +41,6 @@ object Skew {
   def sumOf(c: Column): (Column, Column => Column) = (sum(c), sum(_))
   def countOf: (Column, Column => Column) = (count(lit(1)), x => sum(x))
   def maxOf(c: Column): (Column, Column => Column) = (max(c), max(_))
-  def minOf(c: Column): (Column, Column => Column) = (min(c), min(_))
 
   /** Exact-decimal salted sum of a double measure (the [[graft.util.Exact]]
     * idiom split into its two phases); round+cast the result to taste.

@@ -112,33 +112,18 @@ object StreamingIngest {
     (recs.toSeq, buffer.substring(start))
   }
 
-  /** Opt-in idle bound for incomplete carry state: a key receiving no
-    * chunk for this long is reaped. Guards unbounded state growth under
-    * at-least-once delivery — a chunk REDELIVERED after its file completed
-    * (state already removed) would otherwise resurrect the key as a zombie
-    * entry that can never drain (its nextSeq=0 chunk never arrives again).
-    * 0 (the default) disables the timeout: processing-time timeouts make
-    * the engine schedule timeout-check batches, which sources that
-    * guarantee exactly-once chunk delivery (the daily file) need not pay.
+  /** [[carve]] per key, with the carry in `GroupState`. Limitation: a
+    * chunk redelivered after its file completed recreates carry state for
+    * that key that never drains (its seq-0 chunk never arrives again).
     */
-  val CarryIdleTimeoutMs: Long = 6L * 60 * 60 * 1000
-
   def reassembleChunks(chunks: Dataset[Chunk],
-                       width: Int = FixedWidth.RecordWidth,
-                       idleTimeoutMs: Long = 0L): Dataset[Record] = {
+                       width: Int = FixedWidth.RecordWidth): Dataset[Record] = {
     import chunks.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     chunks
       .groupByKey(_.key)
       .flatMapGroupsWithState[CarryState, Record](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: String, it: Iterator[Chunk], state: GroupState[CarryState]) =>
-          if (state.hasTimedOut) {
-            state.remove() // abandoned/zombie carry — reap (see CarryIdleTimeoutMs)
-            Iterator.empty
-          } else {
           val s0 = state.getOption.getOrElse(CarryState("", 0L, 0L, Map.empty, -1L))
           var buf = s0.buffer
           var idx = s0.emitted
@@ -169,10 +154,8 @@ object StreamingIngest {
             state.remove()
           } else {
             state.update(CarryState(buf, idx, nextSeq, pending.toMap, lastSeq))
-            if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
           }
           out.iterator
-          }
       }
   }
 

@@ -173,7 +173,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("scalable pack pins its output partition count against AQE coalescing") {
     val packed = etl.FixedWidth.packScalable(
-      ops.Ingestion.lineitemRecords(spark, dir), "record",
+      ops.Ingestion.lineitemRecords(spark, dir), col("record"),
       Seq("f_returnflag"), Seq("f_orderkey", "f_linenumber"))
     val plan = planOf(packed)
     // REPARTITION_BY_NUM = user-pinned numPartitions: AQE may not coalesce

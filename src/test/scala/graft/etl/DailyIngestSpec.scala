@@ -79,4 +79,15 @@ class DailyIngestSpec extends SparkSpec {
     DailyIngest.run(spark, in, java.time.LocalDate.of(2024, 1, 15), work)
     assert(spark.read.parquet(s"$work/final").count() == expectKept)
   }
+
+  test("a failing daily-file lookup still posts exactly one FAILED notification") {
+    val work = Files.createTempDirectory("daily_work").toFile.getAbsolutePath
+    val posted = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
+    intercept[java.io.IOException] {
+      DailyIngest.run(spark, "nosuchscheme://drop", java.time.LocalDate.of(2024, 1, 15),
+        work, poster = p => { posted += p; true })
+    }
+    assert(posted.size == 1, posted)
+    assert(posted.head("Subject") == "POS ETL FAILED: <none>", posted.head)
+  }
 }

@@ -106,7 +106,7 @@ class FixedWidthSpec extends SparkSpec {
   test("pack preserves order and emits final partial group") {
     import spark.implicits._
     val df = (0 until 25).map(i => ("g", i, f"$i%03d")).toDF("g", "i", "rec")
-    val packed = pack(df, "rec", Seq("g"), Seq("i"), n = 10)
+    val packed = pack(df, col("rec"), Seq("g"), Seq("i"), n = 10)
       .orderBy("pack_id").select("packed").collect().map(_.getString(0))
     assert(packed.length == 3)
     assert(packed(0) == (0 until 10).map(i => f"$i%03d").mkString)
@@ -118,30 +118,24 @@ class FixedWidthSpec extends SparkSpec {
     import spark.implicits._
     val df = (0 until 100).map(i => ("g", i, f"<$i%04d>")).toDF("g", "i", "rec")
       .repartition(7) // scramble physical order
-    val packed = pack(df, "rec", Seq("g"), Seq("i"), n = 30)
+    val packed = pack(df, col("rec"), Seq("g"), Seq("i"), n = 30)
       .orderBy("pack_id").select("packed").collect().map(_.getString(0))
     assert(packed.mkString == (0 until 100).map(i => f"<$i%04d>").mkString)
-  }
-
-  test("typed OrderedConcat Aggregator pack equals the window/collect_list pack") {
-    import spark.implicits._
-    val df = (0 until 97).map(i => (if (i % 2 == 0) "a" else "b", i, f"[$i%05d]"))
-      .toDF("g", "i", "rec").repartition(5)
-    val a = pack(df, "rec", Seq("g"), Seq("i"), n = 20)
-      .orderBy("g", "pack_id").collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-    val b = packTyped(df, "rec", Seq("g"), Seq("i"), n = 20)
-      .orderBy("g", "pack_id").collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-    assert(a.toSeq == b.toSeq)
   }
 
   test("packScalable (two-phase global row-number) equals the window pack") {
     import spark.implicits._
     val df = (0 until 257).map(i => (s"g${i % 3}", i, f"[$i%05d]"))
       .toDF("g", "i", "rec").repartition(7)
-    val a = packWindow(df, "rec", Seq("g"), Seq("i"), n = 25)
+    val a = packWindow(df, col("rec"), Seq("g"), Seq("i"), n = 25)
       .orderBy("g", "pack_id").collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-    val b = packScalable(df, "rec", Seq("g"), Seq("i"), n = 25, numParts = 5)
-      .orderBy("g", "pack_id").collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
+    // 5 buckets / pinned partitions: not the session's 4
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    val b =
+      try packScalable(df, col("rec"), Seq("g"), Seq("i"), n = 25)
+        .orderBy("g", "pack_id").collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
+      finally spark.conf.set("spark.sql.shuffle.partitions", parts)
     assert(a.toSeq == b.toSeq)
   }
 
@@ -149,16 +143,16 @@ class FixedWidthSpec extends SparkSpec {
     import spark.implicits._
     val df = (0 until 300).map(i => (s"k${i % 2}", s"m${i % 5}", i, f"(${i}%04d)"))
       .toDF("k", "m", "i", "rec").repartition(9)
-    val a = packWindow(df, "rec", Seq("k", "m"), Seq("i"), n = 17)
+    val a = packWindow(df, col("rec"), Seq("k", "m"), Seq("i"), n = 17)
       .orderBy("k", "m", "pack_id").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3)))
-    // windowMaxRowsPerKey = 0 makes the adaptive probe pick packScalable
-    val b = pack(df, "rec", Seq("k", "m"), Seq("i"), n = 17, windowMaxRowsPerKey = 0L)
+    // the route the probe takes past WindowMaxRowsPerKey, forced
+    val b = packScalable(df, col("rec"), Seq("k", "m"), Seq("i"), n = 17)
       .orderBy("k", "m", "pack_id").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3)))
     assert(a.toSeq == b.toSeq)
     // and the default probe picks the window path for small keys — same rows
-    val c = pack(df, "rec", Seq("k", "m"), Seq("i"), n = 17)
+    val c = pack(df, col("rec"), Seq("k", "m"), Seq("i"), n = 17)
       .orderBy("k", "m", "pack_id").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3)))
     assert(c.toSeq == a.toSeq)
@@ -169,7 +163,7 @@ class FixedWidthSpec extends SparkSpec {
     val df = (0 until 201).map(i => (s"g${i % 3}", i, f"[$i%05d]"))
       .toDF("g", "i", "rec").repartition(6)
     def run(): Seq[(String, Long, String)] =
-      packScalable(df, "rec", Seq("g"), Seq("i"), n = 20, numParts = 4)
+      packScalable(df, col("rec"), Seq("g"), Seq("i"), n = 20)
         .orderBy("g", "pack_id").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
     val withCodegen = run()
@@ -198,21 +192,21 @@ class FixedWidthSpec extends SparkSpec {
     assert(back.getDate(10) == java.sql.Date.valueOf("1997-03-15"))
   }
 
-  test("packOf (record-expression, late materialization) equals pack over a materialized column") {
+  test("pack over a record expression equals pack over a materialized column") {
     import graft.ops.Ingestion
     val typed = Ingestion.lineitemTyped(spark, sf0001)
-    val viaExpr = packOf(typed, formatRecord(LineitemLayout),
+    val viaExpr = pack(typed, formatRecord(LineitemLayout),
         partCols = Seq("f_returnflag"), orderCols = Seq("f_orderkey", "f_linenumber"))
       .orderBy("f_returnflag", "pack_id").collect().map(_.toSeq).toSeq
     val viaCol = pack(
         typed.withColumn("record", formatRecord(LineitemLayout)),
-        "record",
+        col("record"),
         partCols = Seq("f_returnflag"), orderCols = Seq("f_orderkey", "f_linenumber"))
       .orderBy("f_returnflag", "pack_id").collect().map(_.toSeq).toSeq
     assert(viaExpr == viaCol)
     // and the forced scalable route, whose prefix-sum scaffold must carry
     // the expression's source columns through its narrow pre-jobs
-    val viaExprScalable = FixedWidth.packScalableOf(typed, formatRecord(LineitemLayout),
+    val viaExprScalable = packScalable(typed, formatRecord(LineitemLayout),
         partCols = Seq("f_returnflag"), orderCols = Seq("f_orderkey", "f_linenumber"))
       .orderBy("f_returnflag", "pack_id").collect().map(_.toSeq).toSeq
     assert(viaExprScalable == viaCol)
@@ -244,7 +238,7 @@ class FixedWidthSpec extends SparkSpec {
     assert(fused == unfused, s"\nfused  =$fused\nunfused=$unfused")
     // and on the real lineitem roundtrip at fixture scale
     val packedLi = pack(
-      graft.ops.Ingestion.lineitemRecords(spark, sf0001), "record",
+      graft.ops.Ingestion.lineitemRecords(spark, sf0001), col("record"),
       partCols = Seq("f_returnflag"), orderCols = Seq("f_orderkey", "f_linenumber"))
     val viaFused = explodeParseFixedWidth(packedLi.select("packed"), "packed", LineitemLayout)
       .groupBy("f_returnflag").agg(

@@ -195,7 +195,9 @@ class SinksSpec extends SparkSpec {
   test("observed metrics count rows and payload bytes in one pass (T6/T7)") {
     import spark.implicits._
     val df = Seq("ab", "cde", "").toDF("payload")
-    val (rows, bytes) = Notify.metricsOf(df, "payload")
+    val (observed, rowsBytes) = Notify.observed(df, "payload")
+    observed.write.format("noop").mode("overwrite").save()
+    val (rows, bytes) = rowsBytes()
     assert(rows == 3 && bytes == 5)
   }
 
