@@ -88,9 +88,15 @@ object DailyIngest {
 
       // 6: promote temp -> final, idempotent anti-join upsert on the key;
       //    the final table is laid out `f_shipdate=YYYY-MM-DD/` so step 8's
-      //    retention is a pure partition drop, never a table rewrite
+      //    retention is a pure partition drop, never a table rewrite. A
+      //    crash inside the previous run's final swap can leave the table
+      //    under its aside with `final` missing; settle it first, or this run
+      //    would promote the new day alone over the retained history
       val temp = spark.read.parquet(lay.temp)
-      val promoted = if (exists(spark, lay.finalT)) {
+      val finalP = new org.apache.hadoop.fs.Path(lay.finalT)
+      val fs = finalP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Sinks.settleAside(fs, finalP)
+      val promoted = if (fs.exists(finalP)) {
         val finalT = spark.read.parquet(lay.finalT)
         finalT.unionByName(temp.join(finalT.select(NaturalKey.map(col): _*),
                                      NaturalKey, "left_anti"))
@@ -135,10 +141,5 @@ object DailyIngest {
         Notify.notify(m, "graft@local", "ops@local")(poster)
         throw e
     }
-  }
-
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 }

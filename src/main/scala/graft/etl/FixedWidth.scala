@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.FixedWidthParseExplode
+
 /** Fixed-width POS record operators — the reference's core transforms
   * (SURVEY.md §2.3):
   *
@@ -36,43 +38,38 @@ object FixedWidth {
       r => length(r) > lit(0))
   }
 
-  /** T1 as a DataFrame op: explode `textCol` into (`idxOut`, `recOut`),
+  /** T1 as a DataFrame op: explode `textCol` into (`rec_idx`, `record`),
     * preserving the record index for downstream ordered operators
     * (posexplode ≈ the reference's implicit sequential order).
     *
-    * Uses the custom single-pass [[graft.plans.FixedWidthExplode]] Generator:
-    * the declarative substring form is O(n²) on long packed rows (UTF-8
-    * char-offset substring re-scans from the start) — 24 s vs 1 s on the
-    * bench roundtrip. [[sliceRecords]] remains the expression form for
-    * short strings.
+    * The single-pass [[FixedWidthParseExplode]] Generator with one raw
+    * field covering the whole record: the declarative substring form is
+    * O(n²) on long packed rows (UTF-8 char-offset substring re-scans from
+    * the start) — 24 s vs 1 s on the bench roundtrip. [[sliceRecords]]
+    * remains the expression form for short strings.
     */
   def explodeFixedWidth(df: DataFrame, textCol: String,
-                        idxOut: String = "rec_idx", recOut: String = "record",
-                        width: Int = RecordWidth): DataFrame = {
-    graft.plans.FixedWidthGenerator.register(df.sparkSession)
+                        width: Int = RecordWidth): DataFrame =
     df.select(col("*"),
-        expr(s"${graft.plans.FixedWidthGenerator.Name}(`$textCol`, $width)")
-          .as(Seq(idxOut, recOut)))
+        FixedWidthParseExplode.column(col(textCol), width,
+            Seq(FixedWidthParseExplode.Spec("record", 0, width, 'r')))
+          .as(Seq("rec_idx", "record")))
       .drop(textCol)
-  }
 
   /** Fused segment-and-parse: packed rows → typed record fields in ONE
-    * generator pass ([[graft.plans.FixedWidthParseExplode]]) — no
-    * intermediate record strings, no per-field substring slices. Output
-    * columns are `pos` plus one typed column per spec field; equivalent to
-    * `explodeFixedWidth` → `parseRecord` (spec-locked in FixedWidthSpec)
-    * at roughly 1/12th the allocation rate.
+    * generator pass ([[FixedWidthParseExplode]]) — no intermediate record
+    * strings, no per-field substring slices. Output columns are `pos` plus
+    * one typed column per spec field; equivalent to `explodeFixedWidth` →
+    * `parseRecord` (spec-locked in FixedWidthSpec) at roughly 1/12th the
+    * allocation rate.
     */
   def explodeParseFixedWidth(df: DataFrame, textCol: String,
                              specs: Seq[FieldSpec],
-                             width: Int = RecordWidth): DataFrame = {
-    graft.plans.FixedWidthParseExplode.register(df.sparkSession)
-    val layout = graft.plans.FixedWidthParseExplode.layoutString(
-      specs.map(f => (f.name, f.start, f.len, f.kind)))
+                             width: Int = RecordWidth): DataFrame =
     df.select(col("*"),
-        expr(s"${graft.plans.FixedWidthParseExplode.Name}(`$textCol`, $width, '$layout')"))
+        FixedWidthParseExplode.column(col(textCol), width,
+            specs.map(f => FixedWidthParseExplode.Spec(f.name, f.start, f.len, f.kind.head))))
       .drop(textCol)
-  }
 
   /** Rows-per-key ceiling for the window pack: above this, one part-key's
     * entire stream no longer sorts safely/fast on a single reducer and

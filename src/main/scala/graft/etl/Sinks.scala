@@ -145,14 +145,19 @@ object Sinks {
     if (dstP.getParent == null) new Path("." + dstP.getName + "_old")
     else new Path(dstP.getParent, "." + dstP.getName + "_old")
 
-  /** The crash-leftover rule for an aside `.<base>_old` ([[asidePath]]):
-    * beside a live `base` it is stale from a completed swap and is
-    * deleted; with `base` missing the prior run crashed between the two
-    * swap renames, the aside is the ONLY live copy, and it is renamed back.
+  /** The crash-leftover rule for a `base`'s aside `.<base>_old`
+    * ([[asidePath]]), a no-op when there is none: beside a live `base` it
+    * is stale from a completed swap and is deleted; with `base` missing the
+    * prior run crashed between the two swap renames, the aside is the ONLY
+    * live copy, and it is renamed back.
     */
-  private def settleAside(fs: FileSystem, aside: Path, base: Path): Unit =
-    if (fs.exists(base)) fs.delete(aside, true)
-    else require(fs.rename(aside, base), s"recover $aside -> $base failed")
+  private[etl] def settleAside(fs: FileSystem, base: Path): Unit = {
+    val aside = asidePath(base)
+    if (fs.exists(aside)) {
+      if (fs.exists(base)) fs.delete(aside, true)
+      else require(fs.rename(aside, base), s"recover $aside -> $base failed")
+    }
+  }
 
   /** The `dateCol=` directories directly under `tableDir`, each with its
     * ISO date when the value parses; empty when `tableDir` is missing.
@@ -193,7 +198,7 @@ object Sinks {
     val dstP = new Path(dst)
     val oldP = asidePath(dstP)
     val fs = srcP.getFileSystem(conf)
-    if (fs.exists(oldP)) settleAside(fs, oldP, dstP)
+    settleAside(fs, dstP)
     // validate the source BEFORE moving dst aside — otherwise a missing src
     // would strand the live table under `_old` (the very window recovered
     // above)
@@ -236,7 +241,7 @@ object Sinks {
     fs.listStatus(root).iterator.filter(_.isDirectory).foreach { s =>
       val n = s.getPath.getName
       if (n.startsWith("." + prefix) && n.endsWith("_old"))
-        settleAside(fs, s.getPath, new Path(root, n.stripPrefix(".").stripSuffix("_old")))
+        settleAside(fs, new Path(root, n.stripPrefix(".").stripSuffix("_old")))
       else if (n.startsWith("." + prefix) && n.endsWith("_compact"))
         fs.delete(s.getPath, true) // orphaned staging copy
     }
@@ -271,6 +276,7 @@ object Sinks {
   def retentionDropPartitions(spark: SparkSession, tableDir: String,
                               dateCol: String, asOf: java.sql.Date,
                               days: Int = 4): (Long, Long) = {
+    require(days >= 0, s"retention days must be >= 0, got $days")
     val cutoff = asOf.toLocalDate.minusDays(days)
     val expired = datePartitions(spark, tableDir, dateCol)
       .collect { case (p, Some(d)) if d.isBefore(cutoff) => p }

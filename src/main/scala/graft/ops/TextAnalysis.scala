@@ -958,14 +958,13 @@ object TextAnalysis {
     * partial+final aggregation.
     */
   def textNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.NfcNormalize.register(spark)
     val decomposed = " cafe\u0301" // e + combining acute; composes under NFC
     val ligature = " \ufb01n"     // fi ligature: NFC identity (NFKC would split)
     Tables.documents(spark, dir)
       .withColumn("t", concat(col("text"),
         when(col("doc_id") % 7 === 0, lit(decomposed)).otherwise(lit("")),
         when(col("doc_id") % 11 === 0, lit(ligature)).otherwise(lit(""))))
-      .select(col("lang"), col("t"), expr("nfc_normalize(t)").as("n"))
+      .select(col("lang"), col("t"), graft.plans.NfcNormalize.column(col("t")).as("n"))
       .groupBy("lang")
       .agg(
         count(lit(1)).as("n_docs"),

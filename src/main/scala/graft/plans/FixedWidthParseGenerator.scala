@@ -1,56 +1,52 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Generator, GenericInternalRow}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused segment-and-parse `Generator`: one byte walk over a packed
-  * fixed-width row emits the TYPED fields of every record directly —
-  * no intermediate per-record string, no per-field `substring` slices.
+/** Segment-and-parse `Generator`: one byte walk over a packed fixed-width
+  * row cuts it into `width`-char records (code-point boundaries, short tail
+  * kept — the reference's T1 segmentation, main.py:409-412 and 560-565) and
+  * emits each record's fields as typed values — no intermediate per-record
+  * string, no per-field `substring` slices.
   *
-  * The unfused pipeline ([[FixedWidthExplode]] → `FixedWidth.parseRecord`)
+  * The declarative form — `explode(transform(sequence(0, n/w), i ->
+  * substring(s, i*w+1, w)))` — is O(n²) on long inputs because UTF8String
+  * char-offset substring is a linear scan from the string start; a
+  * 520k-char packed row (pack factor 1000 × 520) costs ~260M byte scans
+  * per row. This generator walks the UTF-8 bytes once.
+  *
+  * The unfused pipeline (`FixedWidth.explodeFixedWidth` → `parseRecord`)
   * materializes each 520-char record as a UTF8String and then 11 more
   * substring slices per record before casting — ~12 allocations and ~1 KB
-  * of garbage per record, i.e. tens of millions of young-gen objects per
-  * GB of packed data, which is exactly the churn that taxes every later
-  * query in a long-lived executor. This generator parses longs, trimmed
-  * strings, and yyyyMMdd dates straight out of the packed row's byte
-  * array (allocating only what the output row keeps), with null semantics
-  * identical to the declarative `cast`/`rtrim`/`to_date` path — equivalence
-  * is spec-locked (FixedWidthSpec) on adversarial records.
+  * of garbage per record. With typed fields this generator parses longs,
+  * trimmed strings, and yyyyMMdd dates straight out of the packed row's
+  * byte array (allocating only what the output row keeps), with null
+  * semantics identical to the declarative `cast`/`rtrim`/`to_date` path —
+  * equivalence is spec-locked (FixedWidthSpec) on adversarial records. A
+  * raw field ('r') is the record's bytes verbatim: `FixedWidth.explodeFixedWidth`
+  * is this generator with one raw field covering the whole record.
   *
-  * Pure-ASCII records (the reference format, /root/reference/main.py:56)
-  * parse entirely at byte offsets; a record containing any multibyte char
-  * falls back to code-point-correct slicing for that record only.
-  *
-  * Layout is passed as a foldable string `name:start:len:kind;...` so the
-  * generator registers as a plain SQL function
-  * `parse_fixed_width(str, width, layout)`.
+  * Pure-ASCII records (the reference format) parse entirely at byte
+  * offsets; a record containing any multibyte char falls back to
+  * code-point-correct slicing for that record only.
   */
-case class FixedWidthParseExplode(child: Expression, widthExpr: Expression,
-                                  layoutExpr: Expression)
+case class FixedWidthParseExplode(child: Expression, width: Int,
+                                  specs: Seq[FixedWidthParseExplode.Spec])
     extends Generator with CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(child, widthExpr, layoutExpr)
+  override def children: Seq[Expression] = Seq(child)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (child.dataType == StringType &&
-        widthExpr.foldable && widthExpr.dataType == IntegerType &&
-        layoutExpr.foldable && layoutExpr.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "parse_fixed_width(str, width, layout) expects (string, foldable int, foldable string)")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName expects a string argument")
 
-  @transient private lazy val width: Int = widthExpr.eval(null).asInstanceOf[Int]
-
-  @transient private lazy val specs: Array[FixedWidthParseExplode.Spec] =
-    FixedWidthParseExplode.parseLayout(
-      layoutExpr.eval(null).asInstanceOf[UTF8String].toString)
+  @transient private lazy val fields: Array[FixedWidthParseExplode.Spec] = specs.toArray
 
   override def elementSchema: StructType = StructType(
     StructField("pos", IntegerType, nullable = false) +:
@@ -58,9 +54,10 @@ case class FixedWidthParseExplode(child: Expression, widthExpr: Expression,
       s.kind match {
         case 'l' => StructField(s.name, LongType, nullable = true)
         case 'd' => StructField(s.name, DateType, nullable = true)
+        case 'r' => StructField(s.name, StringType, nullable = false)
         case _   => StructField(s.name, StringType, nullable = true)
       }
-    }.toSeq)
+    })
 
   /** The records of one packed input, emitted lazily.
     *
@@ -138,8 +135,8 @@ case class FixedWidthParseExplode(child: Expression, widthExpr: Expression,
     if (!multibyte) {
       // ASCII: char offsets ARE byte offsets — parse in place
       var f = 0
-      while (f < specs.length) {
-        val sp = specs(f)
+      while (f < fields.length) {
+        val sp = fields(f)
         val fs = recStart + sp.start
         val fe = math.min(fs + sp.len, recEnd)
         if (fs >= recEnd) FixedWidthParseExplode.writeEmpty(row, f + 1, sp.kind)
@@ -150,8 +147,8 @@ case class FixedWidthParseExplode(child: Expression, widthExpr: Expression,
       // multibyte record: code-point-correct slicing for this record only
       val rec = UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, recStart, recEnd))
       var f = 0
-      while (f < specs.length) {
-        val sp = specs(f)
+      while (f < fields.length) {
+        val sp = fields(f)
         val slice = rec.substringSQL(sp.start + 1, sp.len)
         val sb = slice.getBytes
         if (sb.length == 0) FixedWidthParseExplode.writeEmpty(row, f + 1, sp.kind)
@@ -162,45 +159,40 @@ case class FixedWidthParseExplode(child: Expression, widthExpr: Expression,
   }
 
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0), widthExpr = newChildren(1), layoutExpr = newChildren(2))
+    copy(child = newChildren(0))
 
   override def prettyName: String = "parse_fixed_width"
 }
 
 object FixedWidthParseExplode {
-  val Name = "parse_fixed_width"
 
+  /** One field: `start`/`len` in chars from the record start; `kind` is
+    * 'l' (long), 's' (right-trimmed string), 'd' (yyyyMMdd date) or 'r'
+    * (raw string, copied verbatim).
+    */
   final case class Spec(name: String, start: Int, len: Int, kind: Char)
 
-  /** `name:start:len:kind;...` (kind ∈ long|str|date). */
-  def parseLayout(s: String): Array[Spec] =
-    s.split(';').filter(_.nonEmpty).map { part =>
-      val Array(name, st, len, kind) = part.split(':')
-      Spec(name, st.toInt, len.toInt, kind.head)
-    }
-
-  def layoutString(specs: Seq[(String, Int, Int, String)]): String =
-    specs.map { case (n, s, l, k) => s"$n:$s:$l:$k" }.mkString(";")
-
-  /** Value of a field whose range lies entirely beyond the record end —
-    * matches `substring` yielding "" then cast/rtrim/to_date: long → null,
-    * str → "", date → null.
+  /** DataFrame-API entry: explode the string column `text` into `pos` plus
+    * one column per spec, cutting every `width` chars.
     */
-  def emptyValue(kind: Char): Any =
-    if (kind == 's') UTF8String.EMPTY_UTF8 else null
+  def column(text: Column, width: Int, specs: Seq[Spec]): Column =
+    ColumnBridge.column(FixedWidthParseExplode(ColumnBridge.expression(text), width, specs))
 
-  /** [[emptyValue]] written into a mutable row slot. */
+  /** A field whose range lies entirely beyond the record end — matches
+    * `substring` yielding "" then cast/rtrim/to_date: long → null,
+    * date → null, str/raw → "".
+    */
   def writeEmpty(row: InternalRow, i: Int, kind: Char): Unit =
-    if (kind == 's') row.update(i, UTF8String.EMPTY_UTF8) else row.setNullAt(i)
+    if (kind == 'l' || kind == 'd') row.setNullAt(i) else row.update(i, UTF8String.EMPTY_UTF8)
 
   /** Parse `bytes[fs, fe)` into `row` slot `i` WITHOUT boxing the numeric
     * kinds — the per-record hot path (r18). Null semantics mirror the
     * declarative path over fixed-width numerics: long = space-trimmed,
     * optional sign, all digits, else null (`cast` additionally accepts
     * decimal-point forms, which zero-padded fixed-width fields never
-    * contain); str = `rtrim(x)` (trailing ASCII spaces); date =
-    * `to_date(x, 'yyyyMMdd')` (exactly 8 digits, valid calendar date,
-    * else null). [[parseField]] delegates here so the two entry points
+    * contain); str = `rtrim(x)` (trailing ASCII spaces); raw = `x` as it
+    * is; date = `to_date(x, 'yyyyMMdd')` (exactly 8 digits, valid calendar
+    * date, else null). [[parseField]] delegates here so the two entry points
     * cannot drift.
     */
   def writeField(bytes: Array[Byte], fs: Int, fe: Int, kind: Char,
@@ -239,6 +231,8 @@ object FixedWidthParseExplode {
       var b = fe
       while (b > fs && bytes(b - 1) == ' ') b -= 1
       row.update(i, UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, fs, b)))
+    case 'r' =>
+      row.update(i, UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, fs, fe)))
     case 'd' =>
       if (fe - fs != 8) row.setNullAt(i)
       else {
@@ -279,18 +273,4 @@ object FixedWidthParseExplode {
       case _   => row.getUTF8String(0)
     }
   }
-
-  private val info = new ExpressionInfo(classOf[FixedWidthParseExplode].getName, Name)
-  private val builder: Seq[Expression] => Expression = {
-    case Seq(s, w, l) => FixedWidthParseExplode(s, w, l)
-    case other => throw new IllegalArgumentException(
-      s"$Name expects 3 arguments, got ${other.length}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(Name), info, builder)
-
-  def inject(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction((FunctionIdentifier(Name), info, builder))
 }

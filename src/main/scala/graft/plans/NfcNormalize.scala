@@ -2,11 +2,11 @@ package graft.plans
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * string, and UTF-8 continuation bytes are ≥ 0x80, so a single byte scan
   * proves normalization is an identity — the common case for web/English
   * corpora, making the per-row cost of this pass ~one memchr at 100 TB.
-  * Registered as SQL `nfc_normalize(str)` (name-compatible with DuckDB's).
+  * Pretty-printed as `nfc_normalize(str)` (name-compatible with DuckDB's).
   */
 case class NfcNormalize(child: Expression) extends UnaryExpression {
 
@@ -44,8 +44,6 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 }
 
 object NfcNormalize {
-  val Name = "nfc_normalize"
-
   /** Called from both interpreted eval and generated Java. */
   def normalize(s: UTF8String): UTF8String = {
     val bytes = s.getBytes
@@ -57,17 +55,5 @@ object NfcNormalize {
     else UTF8String.fromString(Normalizer.normalize(str, Normalizer.Form.NFC))
   }
 
-  private val info = new ExpressionInfo(classOf[NfcNormalize].getName, Name)
-  private val builder: Seq[Expression] => Expression = {
-    case Seq(c) => NfcNormalize(c)
-    case other => throw new IllegalArgumentException(
-      s"$Name expects 1 argument, got ${other.length}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(Name), info, builder)
-
-  def inject(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction((FunctionIdentifier(Name), info, builder))
+  def column(s: Column): Column = ColumnBridge.column(NfcNormalize(ColumnBridge.expression(s)))
 }

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -25,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * expected (embeddings are dense) but propagate to a null sum, and
   * unequal lengths null the result too — exactly the HOF's behavior
   * (`zip_with` pads the shorter array with nulls, which the sum
-  * propagates). Registered as SQL `vec_dot(a, b)`.
+  * propagates). Pretty-printed as `vec_dot(a, b)`.
   */
 case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -93,8 +92,6 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 }
 
 object VecDot {
-  val Name = "vec_dot"
-
   /** Called from both interpreted eval and generated Java, AFTER the
     * caller has established equal lengths. Left-to-right accumulation —
     * do not reorder (oracle bit-equality depends on it).
@@ -128,18 +125,4 @@ object VecDot {
 
   def column(a: Column, b: Column): Column =
     ColumnBridge.column(VecDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  private val info = new ExpressionInfo(classOf[VecDot].getName, Name)
-  private val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => VecDot(a, b)
-    case other => throw new IllegalArgumentException(
-      s"$Name expects 2 arguments, got ${other.length}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(Name), info, builder)
-
-  def inject(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction((FunctionIdentifier(Name), info, builder))
 }

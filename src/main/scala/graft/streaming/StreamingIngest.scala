@@ -87,7 +87,7 @@ object StreamingIngest {
     * (one chunk for the reference's sequential reader).
     *
     * Widths count Unicode CODE POINTS, not UTF-16 units — matching the batch
-    * [[graft.plans.FixedWidthGenerator]] and Python slicing, so streaming
+    * [[graft.plans.FixedWidthParseExplode]] and Python slicing, so streaming
     * reassembly and batch segmentation agree on non-BMP text. A chunk seam
     * may split a surrogate pair; a trailing high surrogate is held back in
     * the carry until its low half arrives, never consumed as a record char.

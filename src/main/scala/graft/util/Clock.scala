@@ -23,11 +23,6 @@ object Clock {
   def businessDateSql(tsSql: String, offsetMinutes: Int = BusinessOffsetMinutes): String =
     s"CAST($tsSql + INTERVAL '$offsetMinutes minutes' AS DATE)"
 
-  /** JST render of a UTC timestamp (notification timestamps,
-    * email_sender.py:43-45).
-    */
-  def jst(ts: Column): Column = from_utc_timestamp(ts, "Asia/Tokyo")
-
   /** Driver-side JST date render for notification bodies
     * (email_sender.py:43-45: strftime %Y-%m-%d in Asia/Tokyo).
     */
@@ -38,6 +33,8 @@ object Clock {
   /** Retention cutoff: strictly-less-than `days` before `asOf` (exclusive
     * bound, daily_cleanup.py:30: `WHERE 当稼動日 < ?`).
     */
-  def retentionKeep(dateCol: Column, asOf: Column, days: Int = 4): Column =
+  def retentionKeep(dateCol: Column, asOf: Column, days: Int = 4): Column = {
+    require(days >= 0, s"retention days must be >= 0, got $days")
     dateCol >= date_sub(asOf, days)
+  }
 }

@@ -130,10 +130,7 @@ object NioLocalFileSystem {
   val SCHEME = "nio"
   val NAME: URI = URI.create(s"$SCHEME:///")
 
-  /** Hadoop-conf registration pair for SparkSession builders:
-    * `.config(NioLocalFileSystem.CONF_KEY, NioLocalFileSystem.CONF_VALUE)`.
-    */
-  val CONF_KEY = s"spark.hadoop.fs.$SCHEME.impl"
+  /** Hadoop-conf value for `fs.nio.impl`. */
   val CONF_VALUE: String = classOf[NioLocalFileSystem].getName
 
   /** `nio://`-scheme spelling of a local filesystem path. */

@@ -5,10 +5,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge to the classic `Column` ⇄ `Expression` converters, which became
-  * `private[sql]` in Spark 4's Column-node refactor. Needed by graft's
-  * custom Catalyst expressions that carry non-SQL-representable state
-  * (e.g. [[graft.plans.KeyedOffsetRunningSum]]'s offsets table) and so can't
-  * go through `FunctionRegistry` + `expr(...)` like the rest.
+  * `private[sql]` in Spark 4's Column-node refactor. Every graft custom
+  * Catalyst expression is exposed as a typed `column(...)` constructor
+  * through here; state that SQL cannot express (e.g.
+  * [[graft.plans.KeyedOffsetRunningSum]]'s offsets table, a parse
+  * generator's field specs) rides along as plain case-class fields.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

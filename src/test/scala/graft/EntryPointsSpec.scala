@@ -46,4 +46,13 @@ class EntryPointsSpec extends AnyFunSuite {
     assert(objectsWith("""^(?!\s*(?:\*|//))[^\n]*SparkSession\s*\.\s*builder\s*\(""") ==
       Set("graft.SparkEntry", "graft.Run", "graft.RunCleanup"))
   }
+
+  test("no code under src/main/scala registers a SQL function or a session extension") {
+    // every graft Catalyst expression is built through its typed column(...)
+    // constructor, so a FunctionRegistry or SparkSessionExtensions hook has
+    // no caller
+    assert(objectsWith(
+      """^(?!\s*(?:\*|//))[^\n]*\b(?:registerFunction|injectFunction|SparkSessionExtensions)\b""") ==
+      Set.empty)
+  }
 }

@@ -56,6 +56,23 @@ class CleanupSpec extends SparkSpec {
     assert(posts.head("Body").contains("5"), "deleted rowcount reported")
   }
 
+  test("negative retention days are rejected and delete nothing, on both layouts") {
+    val dir = tmpDir("cleanupneg") + "/sales"
+    writeTable(dir)
+    val flat = tmpDir("cleanupnegflat") + "/sales"
+    spark.read.parquet(dir).write.parquet(flat)
+    for ((table, partitioned) <- Seq(dir -> true, flat -> false)) {
+      val before = fileState(table)
+      val posts = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
+      intercept[IllegalArgumentException] {
+        Cleanup.run(spark, table, "business_date", days = -1,
+          poster = m => { posts += m; true })
+      }
+      assert(fileState(table) == before, s"partitioned=$partitioned")
+      assert(posts.size == 1 && posts.head("Subject").contains("FAILED"))
+    }
+  }
+
   test("failure path: failure notification sent, original exception re-raised") {
     val posts = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
     intercept[Exception] {

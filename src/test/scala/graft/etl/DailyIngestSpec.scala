@@ -3,6 +3,7 @@ package graft.etl
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -15,12 +16,16 @@ import graft.ops.Ingestion
   */
 class DailyIngestSpec extends SparkSpec {
 
-  private def stageLineitemZip(inputDir: String): String = {
-    val recs = Ingestion.lineitemRecords(spark, sf0001)
+  /** Stage the fixture's lineitem records (those `keep` selects) as the
+    * daily zip for `day` (yyyyMMdd).
+    */
+  private def stageLineitemZip(inputDir: String, day: String = "20240115",
+                               keep: Column = lit(true)): String = {
+    val recs = Ingestion.lineitemRecords(spark, sf0001).filter(keep)
       .orderBy("f_orderkey", "f_linenumber")
       .select("record").collect().map(_.getString(0))
     val text = recs.mkString
-    val name = "R520.20240115_000000.20240115000000.zip"
+    val name = s"R520.${day}_000000.${day}000000.zip"
     val f = new java.io.File(inputDir, name)
     val zos = new ZipOutputStream(new java.io.FileOutputStream(f))
     zos.putNextEntry(new ZipEntry("pos.txt"))
@@ -89,5 +94,27 @@ class DailyIngestSpec extends SparkSpec {
     }
     assert(posted.size == 1, posted)
     assert(posted.head("Subject") == "POS ETL FAILED: <none>", posted.head)
+  }
+
+  test("a rerun after a crash inside the final swap keeps the retained history") {
+    // two days: even order keys arrive on the 15th, odd ones on the 16th
+    def backfill(crash: Boolean): Seq[org.apache.spark.sql.Row] = {
+      val in = Files.createTempDirectory("daily_in").toFile.getAbsolutePath
+      val work = Files.createTempDirectory("daily_work").toFile.getAbsolutePath
+      stageLineitemZip(in, "20240115", col("f_orderkey") % 2 === 0)
+      DailyIngest.run(spark, in, java.time.LocalDate.of(2024, 1, 15), work)
+      // the state a crash between replaceDir's two renames leaves behind:
+      // the live table sits under its aside and `final` is missing
+      if (crash) assert(new java.io.File(s"$work/final")
+        .renameTo(new java.io.File(s"$work/.final_old")))
+      stageLineitemZip(in, "20240116", col("f_orderkey") % 2 === 1)
+      DailyIngest.run(spark, in, java.time.LocalDate.of(2024, 1, 16), work)
+      assert(!new java.io.File(s"$work/.final_old").exists())
+      val t = spark.read.parquet(s"$work/final")
+      t.orderBy(t.columns.map(col): _*).collect().toSeq
+    }
+    val clean = backfill(crash = false)
+    assert(clean.exists(_.getAs[Long]("f_orderkey") % 2 == 0), "day 1 rows retained")
+    assert(backfill(crash = true) == clean)
   }
 }

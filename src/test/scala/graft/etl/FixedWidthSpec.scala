@@ -92,14 +92,19 @@ class FixedWidthSpec extends SparkSpec {
   test("generator output equals the declarative sliceRecords expression") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
-    val strs = (0 until 20).map(_ => rnd.alphanumeric.take(rnd.nextInt(2000)).mkString)
-    val df = strs.toDF("t")
-    val viaExpr = df.select(posexplode(sliceRecords(col("t"), 37)).as(Seq("rec_idx", "record")))
-      .groupBy().agg(count(lit(1)), sum(length(col("record"))), countDistinct(col("record")))
-      .head().toSeq
-    val viaGen = explodeFixedWidth(df, "t", width = 37)
-      .groupBy().agg(count(lit(1)), sum(length(col("record"))), countDistinct(col("record")))
-      .head().toSeq
+    val alnum = (0 until 20).map(_ => rnd.alphanumeric.take(rnd.nextInt(2000)).mkString)
+    // 2-, 3- and 4-byte (non-BMP, surrogate-pair) chars mixed with ASCII:
+    // both sides must cut on code points and keep the short tail
+    val pool = Seq("a", "Z", "7", " ", "é", "中", "\u20ac", "\ud83d\ude00", "\ud800\udf48")
+    val multibyte = (0 until 20).map(_ =>
+      Seq.fill(rnd.nextInt(500))(pool(rnd.nextInt(pool.length))).mkString)
+    val df = (alnum ++ multibyte).zipWithIndex.toDF("t", "id")
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[(Int, Int, String)] =
+      d.select("id", "rec_idx", "record").as[(Int, Int, String)].collect().toSeq.sorted
+    val viaExpr = rows(df.select(col("id"),
+      posexplode(sliceRecords(col("t"), 37)).as(Seq("rec_idx", "record"))))
+    val viaGen = rows(explodeFixedWidth(df, "t", width = 37))
+    assert(viaExpr.map(_._3).exists(r => r.exists(_ > 0x7f)))
     assert(viaGen == viaExpr)
   }
 

@@ -192,11 +192,10 @@ class ExtensionsSpec extends AnyFunSuite with SparkSpec {
       .collect().map(_.getDouble(0))
     assert(native.map(java.lang.Double.doubleToLongBits).toSeq ==
            hof.map(java.lang.Double.doubleToLongBits).toSeq)
-    // SQL registration works
-    graft.plans.VecDot.register(spark)
-    vecs.createOrReplaceTempView("vd")
-    val viaSql = spark.sql("SELECT vec_dot(a, b) FROM vd").collect().map(_.getDouble(0))
-    assert(viaSql.map(java.lang.Double.doubleToLongBits).toSeq ==
+    // the Column constructor itself agrees too
+    val viaColumn = vecs.select(graft.plans.VecDot.column(col("a"), col("b")))
+      .collect().map(_.getDouble(0))
+    assert(viaColumn.map(java.lang.Double.doubleToLongBits).toSeq ==
            hof.map(java.lang.Double.doubleToLongBits).toSeq)
   }
 
@@ -402,25 +401,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkSpec {
     assert(pred.filter(col("predicted").isNull).count() == 0)
   }
 
-  test("ascii_token_count codegen expression equals the declarative tokenizer") {
-    import spark.implicits._
-    graft.plans.AsciiTokenCount.register(spark)
-    val docs = graft.Tables.documents(spark, dir)
-    val mismatches = docs.select(
-        expr("ascii_token_count(text)").as("fast"),
-        size(TextAnalysis.tokens(col("text"))).as("slow"))
-      .filter(col("fast") =!= col("slow")).count()
-    assert(mismatches == 0)
-    // edge cases incl. leading/trailing/multiple whitespace and empty
-    val edge = Seq("", "  ", "a", " a  b\tc\n", "\t\r\n x ").toDF("t")
-      .select(expr("ascii_token_count(t)")).collect().map(_.getInt(0)).toSeq
-    assert(edge == Seq(0, 0, 1, 3, 1))
-    // stays inside whole-stage codegen
-    val q = docs.select(expr("ascii_token_count(text)").as("c")).groupBy().agg(sum(col("c")))
-    q.collect()
-    assert(q.queryExecution.executedPlan.toString.contains("*("))
-  }
-
   test("winnowing fingerprints: short text yields a single fingerprint") {
     import spark.implicits._
     val one = Seq((1L, "s", "abc")).toDF("doc_id", "source", "text")
@@ -508,7 +488,7 @@ class ExtensionsSpec extends AnyFunSuite with SparkSpec {
 
   test("nfc_normalize: composes decomposed sequences, identity on ASCII and on NFC-clean text") {
     import spark.implicits._
-    graft.plans.NfcNormalize.register(spark)
+    import graft.plans.NfcNormalize
     val decomposed = "cafe\u0301"            // e + combining acute U+0301
     val composed = "caf\u00e9"               // precomposed e-acute
     val ligature = "\ufb01n"                 // fi ligature: NFC identity (NFKC splits)
@@ -516,8 +496,8 @@ class ExtensionsSpec extends AnyFunSuite with SparkSpec {
     val angstromC = "\u00c5ngstr\u00f6m"
     val rows = Seq("plain ascii", decomposed, composed, ligature, angstromD, "")
     val out = rows.toDF("t")
-      .select(expr("nfc_normalize(t)").as("n"), length(col("t")).as("lt"),
-              length(expr("nfc_normalize(t)")).as("ln"))
+      .select(NfcNormalize.column(col("t")).as("n"), length(col("t")).as("lt"),
+              length(NfcNormalize.column(col("t"))).as("ln"))
       .collect()
     assert(out(0).getString(0) == "plain ascii")
     assert(out(1).getString(0) == composed && out(1).getInt(1) == 5 && out(1).getInt(2) == 4)
@@ -526,13 +506,13 @@ class ExtensionsSpec extends AnyFunSuite with SparkSpec {
     assert(out(4).getString(0) == angstromC)
     assert(out(5).getString(0) == "")
     // interpreted eval agrees with the codegen path
-    val e = graft.plans.NfcNormalize(
+    val e = NfcNormalize(
       org.apache.spark.sql.catalyst.expressions.Literal.create(decomposed))
     assert(e.eval(null).toString == composed)
     // stays inside whole-stage codegen (a local Seq would constant-fold
     // into a LocalTableScan, so assert on a real parquet-backed plan)
     val q = graft.Tables.documents(spark, dir)
-      .select(expr("nfc_normalize(text)").as("n")).groupBy().agg(max(col("n")))
+      .select(NfcNormalize.column(col("text")).as("n")).groupBy().agg(max(col("n")))
     q.collect()
     assert(q.queryExecution.executedPlan.toString.contains("*("))
   }
