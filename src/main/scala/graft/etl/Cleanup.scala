@@ -77,7 +77,7 @@ object Cleanup {
           val kept = df.filter(Clock.retentionKeep(col(dateCol), lit(effAsOf), days))
           val staged = s"${tableDir}_retained"
           kept.write.mode(SaveMode.Overwrite).parquet(staged)
-          val nKept = spark.read.parquet(staged).count()
+          val nKept = spark.read.schema(df.schema).parquet(staged).count()
           Sinks.replaceDir(spark, staged, tableDir)
           Result(total - nKept, 0L, (System.nanoTime() - t0) / 1e9, partitionDrop = false)
         }

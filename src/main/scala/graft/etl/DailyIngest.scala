@@ -78,6 +78,9 @@ object DailyIngest {
       val (records, rowsBytes) = Notify.observed(explodeFixedWidth(txt, "text"), "record")
       val typed = parseRecord(records, "record", LineitemLayout,
                               keep = Seq("business_date"))
+      // temp and final hold rows parsed by this same layout: every re-read
+      // below takes this schema instead of a footer-reading inference job
+      val schema = typed.schema
 
       // 5: land temp (parquet always; a JDBC raw landing would replace this
       //    write with Sinks.jdbcWriter(typed, url, table) — see SinksSpec's
@@ -92,12 +95,12 @@ object DailyIngest {
       //    crash inside the previous run's final swap can leave the table
       //    under its aside with `final` missing; settle it first, or this run
       //    would promote the new day alone over the retained history
-      val temp = spark.read.parquet(lay.temp)
+      val temp = spark.read.schema(schema).parquet(lay.temp)
       val finalP = new org.apache.hadoop.fs.Path(lay.finalT)
       val fs = finalP.getFileSystem(spark.sparkContext.hadoopConfiguration)
       Sinks.settleAside(fs, finalP)
       val promoted = if (fs.exists(finalP)) {
-        val finalT = spark.read.parquet(lay.finalT)
+        val finalT = spark.read.schema(schema).parquet(lay.finalT)
         finalT.unionByName(temp.join(finalT.select(NaturalKey.map(col): _*),
                                      NaturalKey, "left_anti"))
       } else temp
@@ -106,7 +109,7 @@ object DailyIngest {
       Sinks.replaceDir(spark, staged, lay.finalT)
 
       // 7: rollups from the promoted table
-      val finalT = spark.read.parquet(lay.finalT)
+      val finalT = spark.read.schema(schema).parquet(lay.finalT)
       finalT.groupBy(col("f_sku").as("sku"), col("f_shipdate").as("business_date"))
         .agg(sum("f_qty_cents").as("qty_cents"),
              sum("f_price_cents").as("price_cents"),
@@ -120,9 +123,12 @@ object DailyIngest {
       // 8: retention on the final table (exclusive < asOf - days) — a pure
       //    partition drop on the date layout: kept days are never rewritten.
       //    asOf is the newest partition directory name, the cleanup job's
-      //    rule (partitionBy writes a directory only for a date with rows)
+      //    rule (partitionBy writes a directory only for a date with rows).
+      //    The expired days are deleted without counting their rows: only
+      //    Cleanup.run reports a deleted rowcount
       val asOf = Cleanup.deriveAsOf(spark, lay.finalT, "f_shipdate", partitioned = true)
-      Sinks.retentionDropPartitions(spark, lay.finalT, "f_shipdate", asOf, retentionDays)
+      Sinks.expiredPartitions(spark, lay.finalT, "f_shipdate", asOf, retentionDays)
+        .foreach(fs.delete(_, true))
 
       // 9: archive the input
       Sinks.archiveFile(spark, file, lay.archive)

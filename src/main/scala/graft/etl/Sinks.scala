@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   *    idempotent when the destination exists (main.py:375).
   *  - K5 retention delete (daily_cleanup.py:19-79): strictly-exclusive
   *    `business_date < asOf − days` drop. On the date-partitioned layout
-  *    it is a pure partition drop ([[retentionDropPartitions]], no data
-  *    rewrite of kept days); [[Cleanup.run]] owns the filter + staged
-  *    rewrite fallback for a non-partitioned table.
+  *    it is a pure partition drop ([[expiredPartitions]] names the days, no
+  *    data rewrite of kept days). The daily run deletes them without
+  *    counting; [[retentionDropPartitions]], behind [[Cleanup.run]], counts
+  *    their rows first for the cleanup report. [[Cleanup.run]] also owns
+  *    the filter + staged rewrite fallback for a non-partitioned table.
   *
   * Delivery semantics (SURVEY.md §2.5 C3): JDBC append is at-least-once —
   * exactly-once requires staging to storage and an idempotent MERGE, which
@@ -264,22 +266,32 @@ object Sinks {
     (compacted, before, after)
   }
 
-  /** K5 at scale: TRUE partition drop. On a table laid out as
-    * `tableDir/dateCol=YYYY-MM-DD/…`, delete only the directories whose
-    * date is `< asOf - days` (exclusive bound, daily_cleanup.py:30). Kept
+  /** K5's cutoff rule on a table laid out as `tableDir/dateCol=YYYY-MM-DD/…`:
+    * the partition directories whose date is `< asOf - days` (exclusive
+    * bound, daily_cleanup.py:30). Only directory names are listed; no data
+    * file is read.
+    */
+  private[etl] def expiredPartitions(spark: SparkSession, tableDir: String,
+                                     dateCol: String, asOf: java.sql.Date,
+                                     days: Int): Seq[Path] = {
+    require(days >= 0, s"retention days must be >= 0, got $days")
+    val cutoff = asOf.toLocalDate.minusDays(days)
+    datePartitions(spark, tableDir, dateCol)
+      .collect { case (p, Some(d)) if d.isBefore(cutoff) => p }
+  }
+
+  /** K5 at scale: TRUE partition drop of the [[expiredPartitions]]. Kept
     * partitions' files are never read, rewritten, or touched — retention
     * cost is O(expired data), not O(table). Returns (deletedRows,
     * deletedPartitions); the deleted rowcount (reported by the reference's
     * cleanup email, daily_cleanup.py:35-49) is counted from the expired
-    * directories only, before deletion.
+    * directories only, before deletion. The daily run drops the same
+    * partitions without this count.
     */
   def retentionDropPartitions(spark: SparkSession, tableDir: String,
                               dateCol: String, asOf: java.sql.Date,
                               days: Int = 4): (Long, Long) = {
-    require(days >= 0, s"retention days must be >= 0, got $days")
-    val cutoff = asOf.toLocalDate.minusDays(days)
-    val expired = datePartitions(spark, tableDir, dateCol)
-      .collect { case (p, Some(d)) if d.isBefore(cutoff) => p }
+    val expired = expiredPartitions(spark, tableDir, dateCol, asOf, days)
     if (expired.isEmpty) return (0L, 0L)
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // An expired dir may hold no data files (leftover of a previously

@@ -38,8 +38,8 @@ object Temporal {
   /** q_retention: the retention delete (daily_cleanup.py:30, exclusive `<`
     * bound, 4 days) expressed as keep/drop partitioning relative to the max
     * business date in the data. At scale this is a partition drop on a
-    * date-partitioned table — see graft.etl.Sinks.retentionFilter for the
-    * writer side.
+    * date-partitioned table — see graft.etl.Sinks.retentionDropPartitions
+    * for the writer side.
     */
   def retention(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)

@@ -3,6 +3,7 @@ package graft.etl
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -96,18 +97,26 @@ class DailyIngestSpec extends SparkSpec {
     assert(posted.head("Subject") == "POS ETL FAILED: <none>", posted.head)
   }
 
+  /** Day 1 of a two-day backfill: even order keys arrive and are run on
+    * the 15th, then the odd ones are staged as the 16th's file. Returns
+    * (input dir, work dir).
+    */
+  private def runFirstOfTwoDays(): (String, String) = {
+    val in = Files.createTempDirectory("daily_in").toFile.getAbsolutePath
+    val work = Files.createTempDirectory("daily_work").toFile.getAbsolutePath
+    stageLineitemZip(in, "20240115", col("f_orderkey") % 2 === 0)
+    DailyIngest.run(spark, in, java.time.LocalDate.of(2024, 1, 15), work)
+    stageLineitemZip(in, "20240116", col("f_orderkey") % 2 === 1)
+    (in, work)
+  }
+
   test("a rerun after a crash inside the final swap keeps the retained history") {
-    // two days: even order keys arrive on the 15th, odd ones on the 16th
     def backfill(crash: Boolean): Seq[org.apache.spark.sql.Row] = {
-      val in = Files.createTempDirectory("daily_in").toFile.getAbsolutePath
-      val work = Files.createTempDirectory("daily_work").toFile.getAbsolutePath
-      stageLineitemZip(in, "20240115", col("f_orderkey") % 2 === 0)
-      DailyIngest.run(spark, in, java.time.LocalDate.of(2024, 1, 15), work)
+      val (in, work) = runFirstOfTwoDays()
       // the state a crash between replaceDir's two renames leaves behind:
       // the live table sits under its aside and `final` is missing
       if (crash) assert(new java.io.File(s"$work/final")
         .renameTo(new java.io.File(s"$work/.final_old")))
-      stageLineitemZip(in, "20240116", col("f_orderkey") % 2 === 1)
       DailyIngest.run(spark, in, java.time.LocalDate.of(2024, 1, 16), work)
       assert(!new java.io.File(s"$work/.final_old").exists())
       val t = spark.read.parquet(s"$work/final")
@@ -116,5 +125,54 @@ class DailyIngestSpec extends SparkSpec {
     val clean = backfill(crash = false)
     assert(clean.exists(_.getAs[Long]("f_orderkey") % 2 == 0), "day 1 rows retained")
     assert(backfill(crash = true) == clean)
+  }
+
+  test("a warm daily run that expires partitions submits only the jobs that do its work") {
+    // day 2 of the two-day backfill: every fixture date older than the
+    // newest minus 4 days expires
+    val (in, work) = runFirstOfTwoDays()
+
+    // count only this thread's jobs: the run's jobs inherit the local
+    // property, other suites' jobs do not carry it
+    val key = "graft.spec.jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = scala.concurrent.Promise[Unit]()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case "daily" => jobs.incrementAndGet()
+          case "drain" => drained.trySuccess(())
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(counter)
+    try {
+      sc.setLocalProperty(key, "daily")
+      DailyIngest.run(spark, in, java.time.LocalDate.of(2024, 1, 16), work)
+      // the listener queue delivers in order: once the drain job's start
+      // arrives, every job the run submitted has been counted
+      sc.setLocalProperty(key, "drain")
+      sc.parallelize(Seq(1), 1).count()
+      scala.concurrent.Await.result(drained.future,
+        scala.concurrent.duration.Duration(60, "s"))
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(counter)
+    }
+    // land 1, promote 3, sku_daily 2, sales_daily 3, plus one parallel
+    // listing of the ~1,760 ship-date directories the rollups read (the
+    // fixture spans seven years; a real day lands a handful, listed on the
+    // driver). No schema inference for a table the run wrote itself, no
+    // count of the expired rows
+    assert(jobs.get == 10, s"${jobs.get} jobs")
+
+    val shipdates = Tables.lineitem(spark, sf0001)
+      .select(to_date(col("l_shipdate"))).distinct().collect().map(_.getDate(0).toLocalDate)
+    val asOf = shipdates.maxBy(_.toEpochDay)
+    val kept = spark.read.parquet(s"$work/final").select("f_shipdate").distinct()
+      .collect().map(_.getDate(0).toLocalDate).toSet
+    assert(kept == shipdates.filterNot(_.isBefore(asOf.minusDays(4))).toSet)
+    assert(shipdates.exists(_.isBefore(asOf.minusDays(4))), "nothing expired")
   }
 }
