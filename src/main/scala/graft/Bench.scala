@@ -1,20 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** One stall-transparency record (r15 verdict item 1): a timed query
-    * that read far beyond its same-build reference, its immediate untimed
-    * re-measure, the 1-minute system loadavg sampled at detection, and the
-    * HYPERVISOR STEAL (CPU-seconds, /proc/stat field 8) accumulated during
-    * the stalled execution. Steal is the observable loadavg cannot see —
-    * this host carries hours of accumulated steal time, i.e. co-tenant VM
-    * bursts throttle it invisibly to every in-guest load metric, which is
-    * exactly the shape of the r13-r15 driver-window one-offs (contiguous
-    * movers, different queries each run, magnitudes beyond any in-guest
-    * load injection). `retry` is -1.0 if the re-measure itself threw;
-    * `steal` is -1.0 off Linux.
+  /** One timed query: its wall seconds, and over the same interval this
+    * JVM's process CPU-seconds (all threads; Bench runs `local[N]`, so that
+    * is every Spark task) and the host's hypervisor steal CPU-seconds
+    * (/proc/stat field 8). `cpu` and `steal` are -1 where unavailable.
     */
-  private[graft] final case class Stall(
-      name: String, timed: Double, retry: Double, load: Double, steal: Double)
+  private[graft] final case class Timing(
+      name: String, wall: Double, cpu: Double, steal: Double)
 
   /** Cumulative hypervisor steal jiffies (USER_HZ = 100) from /proc/stat,
     * or -1 where unavailable.
@@ -28,6 +21,17 @@ object Bench {
       } finally src.close()
     } catch { case _: Throwable => -1L }
 
+  /** Process CPU nanoseconds of this JVM, or -1 where unavailable. */
+  private def processCpuNanos(): Long =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
+      case _ => -1L
+    }
+
+  /** `(end - start) / perSecond`, or -1 when either sample is unavailable. */
+  private def delta(start: Long, end: Long, perSecond: Double): Double =
+    if (start < 0 || end < 0) -1.0 else (end - start) / perSecond
+
   /** Times each query in order. A query that throws must fail LOUDLY,
     * never silently time as near-zero: correctness is separately gated
     * (Verify) so a swallow can't hide a wrong answer, but it would flatter
@@ -40,40 +44,18 @@ object Bench {
     * `"tainted"`, and the process exits nonzero. BenchSpec forces both
     * throw classes to lock the behavior.
     *
-    * STALL TRANSPARENCY (r15 verdict item 1 — diagnosis, never gaming):
-    * when a successfully-timed query exceeds `stallFactor` × its
-    * `stallRef` entry AND the excess is over `stallAbsFloor` seconds
-    * absolute (sub-second references triple on scheduling noise alone),
-    * the harness immediately re-measures it once and emits BOTH numbers
-    * plus the loadavg at detection in the JSON's `"stalls"` object. The
-    * PRIMARY timing — results, total — is the original, untouched; the
-    * retry exists so a one-off driver-window number like r15's
-    * q_knn_sq 31.76 s (vs ≤2.2 s in 14 parity runs) carries its own
-    * explanation: a small retry names a transient slot stall, a matching
-    * retry names a real regression. The retry runs after the standard
-    * untimed cleanup pass so it sees the same state a fresh timed slot
-    * would.
-    *
-    * The trigger is 2.0× since r17 (r16 verdict item 1): at the original
-    * 3× both of r16's unexonerated driver entries (q_pagerank 2.14×,
-    * q_allpairs_cosine 2.28×) fell in a 2–3× blind spot and carried no
-    * in-slot retry/steal evidence, while every >3× entry did — and all
-    * three exonerated. The >`stallAbsFloor` absolute-excess guard stays:
-    * sub-second references double on scheduling noise alone, and the
-    * cost of a wider trigger is only one cheap untimed re-measure per
-    * flagged query.
+    * Every query's [[Timing]] carries its own explanation, with no
+    * reference run to compare against: if its wall rises while its `cpu`
+    * stays flat and its `steal` rises, the host was contended; if its
+    * `cpu` rises with the wall, the code got slower.
     */
   private[graft] def timeQueries(
       queries: Seq[(String, () => Unit)],
       cleanup: () => Unit = () => (),
-      preWarm: String => Unit = _ => (),
-      stallRef: Map[String, Double] = Map.empty,
-      stallFactor: Double = 2.0,
-      stallAbsFloor: Double = 1.0)
-      : (Seq[(String, Double)], Seq[String], Option[String], Seq[Stall]) = {
+      preWarm: String => Unit = _ => ())
+      : (Seq[Timing], Seq[String], Option[String]) = {
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    val results = scala.collection.mutable.ListBuffer.empty[(String, Double)]
-    val stalls = scala.collection.mutable.ListBuffer.empty[Stall]
+    val timings = scala.collection.mutable.ListBuffer.empty[Timing]
     var fatal: Option[String] = None
     val it = queries.iterator
     while (it.hasNext && fatal.isEmpty) {
@@ -98,6 +80,7 @@ object Bench {
       }
       if (fatal.isDefined) () else {
       val steal0 = stealJiffies()
+      val cpu0 = processCpuNanos()
       val t0 = System.nanoTime()
       // non-fatal Throwables must not abort the run and discard ~190
       // completed timings before bench_out.json is written — partial
@@ -114,113 +97,14 @@ object Bench {
           System.err.println(s"BENCH FAILED: $name — $e")
           e.printStackTrace()
       }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val wall = (System.nanoTime() - t0) / 1e9
+      val cpu1 = processCpuNanos()
       val steal1 = stealJiffies()
-      results += (name -> dt)
+      timings += Timing(name, wall, delta(cpu0, cpu1, 1e9), delta(steal0, steal1, 100.0))
       if (fatal.isEmpty) cleanup() // a wedged JVM gets no best-effort GC pass
-      // stall re-measure: only for a SUCCESSFUL timing (a failed query's
-      // wall is meaningless) whose reference entry flags it; runs after
-      // the cleanup above so it sees fresh-slot state
-      if (fatal.isEmpty && !failed.contains(name)) {
-        stallRef.get(name).foreach { ref =>
-          if (dt > stallFactor * ref && dt - ref > stallAbsFloor) {
-            val load = java.lang.management.ManagementFactory
-              .getOperatingSystemMXBean.getSystemLoadAverage
-            val steal =
-              if (steal0 < 0 || steal1 < 0) -1.0 else (steal1 - steal0) / 100.0
-            System.err.println(f"BENCH STALL: $name timed $dt%.2f s vs ref " +
-              f"$ref%.2f s (>${stallFactor}x) at loadavg $load%.2f, " +
-              f"steal $steal%.2f cpu-s — re-measuring once")
-            val r0 = System.nanoTime()
-            val retry =
-              try { run(); (System.nanoTime() - r0) / 1e9 }
-              catch {
-                case e: VirtualMachineError =>
-                  fatal = Some(s"${e.getClass.getSimpleName} at $name (stall retry)")
-                  System.err.println(s"BENCH FATAL (run aborted): stall retry $name — $e")
-                  e.printStackTrace(); -1.0
-                case e: Throwable =>
-                  System.err.println(s"BENCH STALL RETRY FAILED: $name — $e")
-                  e.printStackTrace(); -1.0
-              }
-            stalls += Stall(name, dt, retry, load, steal)
-            if (fatal.isEmpty) cleanup()
-          }
-        }
-      }
       }
     }
-    (results.toList, failed.toList, fatal, stalls.toList)
-  }
-
-  /** Parse the per-query map out of a bench_out-format JSON line (our own
-    * writer's format — `"queries":{"q_x":1.2345,…}`) for the stall
-    * reference. Regex-scoped to `q_`-prefixed keys so the wrapper's
-    * `value`/`rest`/`omitted` fields never leak in; returns empty (loudly)
-    * if the file is absent — the bench then simply runs without stall
-    * transparency rather than failing.
-    */
-  private[graft] def parseStallRef(path: String): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-      // \s* after the colon: our own writer emits dense JSON, but the
-      // reference map may be regenerated by tooling that space-pads
-      // (json.dumps default) — a silent zero-entry parse here disables
-      // stall transparency for the whole run (caught in r16: run5's
-      // q_attribution 3.7x slot went unrecorded against a space-padded
-      // anchor). The optional exponent is the same bug class (r16
-      // advice): json.dumps writes tiny values in scientific notation
-      // ("q_x": 8.5e-05), and without it the match stops at the
-      // mantissa — 8.5e-05 silently parses as 8.5, inflating that
-      // query's reference and suppressing its stall detection.
-      val re =
-        """"(q_[A-Za-z0-9_]+)":\s*([0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)""".r
-      re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"WARN: stall reference $path unreadable ($e) — " +
-          "stall transparency disabled for this run")
-        Map.empty
-    }
-
-  /** The repo root located by walking up from this class's code source
-    * (`target/scala-2.13/classes` → repo) to the first directory holding
-    * `build.sbt`; None when the code source is unavailable (e.g. a
-    * sandboxed loader) or no build.sbt exists above it.
-    */
-  private[graft] def repoRoot(): Option[java.nio.file.Path] =
-    try {
-      val loc = getClass.getProtectionDomain.getCodeSource.getLocation.toURI
-      Iterator.iterate(java.nio.file.Paths.get(loc))(_.getParent)
-        .takeWhile(_ != null)
-        .find(p => java.nio.file.Files.isReadable(p.resolve("build.sbt")))
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Resolve the stall-reference file name (r16 advice): the committed
-    * anchor lives at the repo root, but the lookup used to be CWD-relative
-    * — run from any other directory the parse warned on stderr and
-    * silently disabled stall transparency, the exact failure class
-    * `parseStallRef`'s own r16 comment documents (gauge_window.py got the
-    * script-relative `_REPO` fix that round; Bench did not). Order: the
-    * literal path when readable (the common run-from-repo-root case), else
-    * the same name under [[repoRoot]], else the name as given (which then
-    * parses empty, and main says so on stdout). `cwd` is a parameter only
-    * so the spec can exercise the run-from-elsewhere branch (the JVM cannot
-    * chdir).
-    */
-  private[graft] def resolveStallRefPath(
-      name: String,
-      cwd: java.nio.file.Path = java.nio.file.Paths.get("").toAbsolutePath)
-      : String = {
-    val literal =
-      if (java.nio.file.Paths.get(name).isAbsolute) java.nio.file.Paths.get(name)
-      else cwd.resolve(name)
-    if (java.nio.file.Files.isReadable(literal)) literal.toString
-    else repoRoot().map(_.resolve(name))
-      .filter(java.nio.file.Files.isReadable)
-      .map(_.toString)
-      .getOrElse(name)
+    (timings.toList, failed.toList, fatal)
   }
 
   /** `,"steal_total":X.XX` for the bench JSON line — the run's total
@@ -236,6 +120,47 @@ object Bench {
   /** 4-decimal seconds (0.1 ms resolution — far below host-window noise). */
   private def fmt(v: Double): String =
     "%.4f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** `{"q_x":1.2345,…}`: one entry per timing, in the timings' order. */
+  private def secondsJson(timings: Seq[Timing], of: Timing => Double): String =
+    timings.map(t => "\"" + t.name + "\":" + fmt(of(t))).mkString("{", ",", "}")
+
+  /** `,"cpu_s":{…},"steal_s":{…}` for the bench_out.json line: each timed
+    * query's process CPU-s and steal CPU-s, keyed like `"queries"`.
+    */
+  private[graft] def cpuStealJson(timings: Seq[Timing]): String =
+    s""","cpu_s":${secondsJson(timings, _.cpu)},"steal_s":${secondsJson(timings, _.steal)}"""
+
+  /** The stdout line for `(name, seconds)` results, given the line around
+    * a `"queries"` object. The harness captures only a bounded stdout TAIL
+    * (~2000 chars, BENCH_r04/r05 both truncated), and the suite has
+    * outgrown it at any numeric precision — so when the full map would
+    * pass the 1700-char budget, the line keeps per-query entries
+    * slowest-first until the budget and aggregates the remainder into
+    * "rest" (sum of omitted times) + "omitted" (their count).
+    * Slowest-first keeps every perf-relevant number parseable; the omitted
+    * tail is sub-second queries, all present in bench_out.json.
+    */
+  private[graft] def stdoutLine(
+      results: Seq[(String, Double)], lineOf: String => String): String = {
+    val budget = 1700
+    val bySlowest = results.sortBy { case (k, v) => (-v, k) }
+    val overhead = lineOf("{}").length + "\"rest\":12345.6789,\"omitted\":123".length
+    var used = overhead
+    val kept = bySlowest.takeWhile { case (k, v) =>
+      val w = k.length + fmt(v).length + 4 // quotes + colon + comma
+      if (used + w <= budget) { used += w; true } else false
+    }
+    if (kept.length == results.length)
+      lineOf(results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}"))
+    else {
+      val rest = results.map(_._2).sum - kept.map(_._2).sum
+      val qs = (kept.map { case (k, v) => "\"" + k + "\":" + fmt(v) } :+
+        ("\"rest\":" + fmt(rest) + ",\"omitted\":" + (results.length - kept.length)))
+        .mkString("{", ",", "}")
+      lineOf(qs)
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -268,21 +193,11 @@ object Bench {
     // 13.6 s-vs-3.8 s flap shape.
     spark.catalog.clearCache()
     System.gc()
-    // stall-transparency reference: the committed same-build per-query
-    // minimum composite (see timeQueries scaladoc), resolved against the
-    // repo root (resolveStallRefPath). Its absence is a LOUD stdout notice
-    // — a run without stall transparency must say so where the harness
-    // looks, not in a buried stderr warn (r16 advice).
-    val stallRefPath = resolveStallRefPath("bench_anchor_r18.json")
-    val stallRef = parseStallRef(stallRefPath)
-    if (stallRef.isEmpty)
-      println(s"BENCH NOTE: stall reference $stallRefPath yielded no entries" +
-        " — stall transparency DISABLED for this run")
     // run-total steal window: from just before the first timed query to
     // just after the last (the staging/warmup passes above are untimed and
     // excluded — the number should explain the TIMED totals)
     val stealRun0 = stealJiffies()
-    val (results, failed, fatal, stalls) = timeQueries(
+    val (timings, failed, fatal) = timeQueries(
       SparkEntry.queries.toSeq.sortBy(_._1)
         .map { case (name, fn) => name -> (() => { fn(spark, sfDir).count(); () }) },
       // Untimed inter-query cleanup: broadcast blocks from finished joins
@@ -299,60 +214,25 @@ object Bench {
       // the timed measurement and skew it
       preWarm = name =>
         try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
-        finally spark.catalog.clearCache(),
-      stallRef = stallRef)
+        finally spark.catalog.clearCache())
     val stealRun1 = stealJiffies()
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = timings.map(_.wall).sum
     val failedJson =
       if (failed.isEmpty) ""
       else failed.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
     val taintedJson = fatal.fold("")(f => s""","tainted":"$f"""")
-    // stall-transparency records (see timeQueries scaladoc): timed = the
-    // primary number already in "queries", retry = the immediate untimed
-    // re-measure, load = 1-min loadavg at detection. Diagnosis only — the
-    // primary timings and total are untouched.
-    val stallsJson =
-      if (stalls.isEmpty) ""
-      else stalls.map(s => s""""${s.name}":{"timed":${fmt(s.timed)},""" +
-          s""""retry":${fmt(s.retry)},"load":${fmt(s.load)},""" +
-          s""""steal":${fmt(s.steal)}}""")
-        .mkString(",\"stalls\":{", ",", "}")
-    // run-total steal CPU-s over the timed window (r16 verdict item 7):
-    // the one-number contended-window indicator gauge_window.py surfaces
+    // run-total steal CPU-s over the timed window (r16 verdict item 7)
     val stealJson = stealTotalJson(stealRun0, stealRun1)
-    def lineOf(qs: String): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$failedJson$taintedJson$stallsJson$stealJson,"sf":"$sfDir"}"""
-    // Full per-query map (alphabetical) → bench_out.json. The harness
-    // captures only a bounded stdout TAIL (~2000 chars, BENCH_r04/r05 both
-    // truncated), and the suite has outgrown it at any numeric precision —
-    // so stdout carries a SELF-TRUNCATING line instead: per-query entries
-    // slowest-first until the budget, remainder aggregated into "rest"
-    // (sum of omitted times) + "omitted" (their count). Slowest-first
-    // keeps every perf-relevant number parseable; the omitted tail is
-    // sub-second queries, all present in bench_out.json.
-    val fullLine = lineOf(results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}"))
+    def lineOf(qs: String, perQuery: String = ""): String =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$perQuery$failedJson$taintedJson$stealJson,"sf":"$sfDir"}"""
+    // Full per-query maps (alphabetical): wall, process CPU-s and steal
+    // CPU-s → bench_out.json; stdout carries the bounded wall-only line.
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")), fullLine + "\n")
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
+      lineOf(secondsJson(timings, _.wall), cpuStealJson(timings)) + "\n")
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"WARN: bench_out.json write failed: $e") }
-    val budget = 1700
-    val bySlowest = results.sortBy { case (k, v) => (-v, k) }
-    val overhead = lineOf("{}").length + "\"rest\":12345.6789,\"omitted\":123".length
-    var used = overhead
-    val kept = bySlowest.takeWhile { case (k, v) =>
-      val w = k.length + fmt(v).length + 4 // quotes + colon + comma
-      if (used + w <= budget) { used += w; true } else false
-    }
-    val stdoutLine =
-      if (kept.length == results.length) fullLine
-      else {
-        val rest = results.map(_._2).sum - kept.map(_._2).sum
-        val qs = (kept.map { case (k, v) => "\"" + k + "\":" + fmt(v) } :+
-          ("\"rest\":" + fmt(rest) + ",\"omitted\":" + (results.length - kept.length)))
-          .mkString("{", ",", "}")
-        lineOf(qs)
-      }
+    val line = stdoutLine(timings.map(t => t.name -> t.wall), lineOf(_))
     // JSON printed AFTER spark.stop(): shutdown's stderr WARNs land first,
     // so the JSON object is the process's genuinely-last output line (the
     // harness tail-parser never extracted it mid-tail — BENCH_r04/r05/r06
@@ -363,10 +243,10 @@ object Bench {
     // flushed above.
     if (fatal.isDefined) {
       System.err.println(s"BENCH ABORTED: ${fatal.get} — timings after it not taken")
-      println(stdoutLine)
+      println(line)
       sys.exit(1)
     }
     spark.stop()
-    println(stdoutLine)
+    println(line)
   }
 }

@@ -355,10 +355,10 @@ object TextAnalysis {
     // ONE task (~1.5 CPU-s serial) ahead of five small consumer stages —
     // while the FULL session-width spread was measured and REJECTED in r17
     // (q_bm25_topk 2.17-2.37 → 2.66-3.38 s, q_rrf_fusion 2.25-2.37 →
-    // 2.60-3.07 s, bench_r17_run1-4: a 32-partition cache turns all five
-    // small consumer stages — dl, stats, df, pivot postings, tf — into
-    // 32-task scheduling floors that cost more than the tokenize they
-    // parallelize). Capping the spread at 8 parallelizes the tokenize most
+    // 2.60-3.07 s, the r17 bench runs 1-4 in git history: a 32-partition
+    // cache turns all five small consumer stages — dl, stats, df, pivot
+    // postings, tf — into 32-task scheduling floors that cost more than the
+    // tokenize they parallelize). Capping the spread at 8 parallelizes the tokenize most
     // of the way while consumer stages stay 8 tasks wide (r17 verdict
     // item 1's prescribed experiment; measured in OPTIMIZATION_r18.md).
     // At real split counts the cap-guard makes this a no-op, exactly like

@@ -12,7 +12,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("timeQueries records a throwing query in the failed list and keeps timing the rest") {
     var cleanups = 0
-    val (results, failed, fatal, _) = Bench.timeQueries(
+    val (timings, failed, fatal) = Bench.timeQueries(
       Seq(
         "q_ok_first" -> (() => ()),
         "q_boom" -> (() => sys.error("forced bench failure")),
@@ -21,15 +21,15 @@ class BenchSpec extends AnyFunSuite {
     assert(failed == Seq("q_boom"), failed.mkString(","))
     assert(fatal.isEmpty)
     // the suite keeps going: every query reports a timing, failed or not
-    assert(results.map(_._1) == Seq("q_ok_first", "q_boom", "q_ok_last"))
-    assert(results.forall(_._2 >= 0.0))
+    assert(timings.map(_.name) == Seq("q_ok_first", "q_boom", "q_ok_last"))
+    assert(timings.forall(_.wall >= 0.0))
     // cleanup stays untimed but still runs after a failed query
     assert(cleanups == 3)
   }
 
   test("timeQueries with no failures returns an empty failed list (no spurious \"failed\" key)") {
-    val (results, failed, fatal, _) = Bench.timeQueries(Seq("q_ok" -> (() => ())))
-    assert(failed.isEmpty && fatal.isEmpty && results.length == 1)
+    val (timings, failed, fatal) = Bench.timeQueries(Seq("q_ok" -> (() => ())))
+    assert(failed.isEmpty && fatal.isEmpty && timings.length == 1)
   }
 
   test("preWarm runs untimed before each query, and a throwing warm pass never fails the timed query") {
@@ -37,7 +37,7 @@ class BenchSpec extends AnyFunSuite {
     // the clock starts; a broken warm pass is swallowed so the failure
     // surfaces (or not) in the timed run itself, never masked by warmup
     val order = scala.collection.mutable.ListBuffer.empty[String]
-    val (results, failed, _, _) = Bench.timeQueries(
+    val (timings, failed, _) = Bench.timeQueries(
       Seq(
         "q_warmed" -> (() => { order += "run:q_warmed"; () }),
         "q_cold" -> (() => { order += "run:q_cold"; () })),
@@ -49,7 +49,7 @@ class BenchSpec extends AnyFunSuite {
     assert(order.toList == List(
       "warm:q_warmed", "run:q_warmed", "warm:q_cold", "run:q_cold"),
       order.mkString(","))
-    assert(results.map(_._1) == Seq("q_warmed", "q_cold"))
+    assert(timings.map(_.name) == Seq("q_warmed", "q_cold"))
   }
 
   test("a JVM-fatal error in preWarm aborts like the timed path: timings kept, query never timed") {
@@ -58,7 +58,7 @@ class BenchSpec extends AnyFunSuite {
     // silently swallowed (the JVM is wedged) — it gets the timed path's
     // flush-and-abort treatment
     var ranTimed = false
-    val (results, failed, fatal, _) = Bench.timeQueries(
+    val (timings, failed, fatal) = Bench.timeQueries(
       Seq(
         "q_ok_first" -> (() => ()),
         "q_warm_oom" -> (() => { ranTimed = true })),
@@ -68,13 +68,13 @@ class BenchSpec extends AnyFunSuite {
     assert(failed == Seq("q_warm_oom"))
     assert(!ranTimed, "the timed query ran in a wedged JVM")
     // completed timings flush; the aborted query reports none
-    assert(results.map(_._1) == Seq("q_ok_first"))
+    assert(timings.map(_.name) == Seq("q_ok_first"))
   }
 
   test("timeQueries aborts on a JVM-fatal error: completed timings kept, later queries never run") {
     var ranLast = false
     var cleanups = 0
-    val (results, failed, fatal, _) = Bench.timeQueries(
+    val (timings, failed, fatal) = Bench.timeQueries(
       Seq(
         "q_ok_first" -> (() => ()),
         // synthetic, never allocation-driven: constructing and throwing an
@@ -85,38 +85,10 @@ class BenchSpec extends AnyFunSuite {
     assert(fatal.contains("OutOfMemoryError at q_oom"), fatal.toString)
     assert(failed == Seq("q_oom"))
     // partial timings beat total loss: the completed + fatal entries flush
-    assert(results.map(_._1) == Seq("q_ok_first", "q_oom"))
+    assert(timings.map(_.name) == Seq("q_ok_first", "q_oom"))
     assert(!ranLast, "a query after the fatal error was still run")
     // no best-effort cleanup pass in a possibly-wedged JVM
     assert(cleanups == 1)
-  }
-
-  // --- stall transparency (r15 verdict item 1) ------------------------------
-
-  test("a timing beyond stallFactor x its reference is re-measured once; primary number untouched") {
-    var runs = 0
-    var cleanups = 0
-    val (results, failed, fatal, stalls) = Bench.timeQueries(
-      Seq("q_stall" -> (() => {
-        runs += 1
-        if (runs == 1) Thread.sleep(200) // first (timed) pass stalls
-      })),
-      cleanup = () => cleanups += 1,
-      stallRef = Map("q_stall" -> 0.02),
-      stallFactor = 3.0, stallAbsFloor = 0.05)
-    assert(failed.isEmpty && fatal.isEmpty)
-    assert(runs == 2, "the stall must trigger exactly one re-measure")
-    assert(stalls.map(_.name) == Seq("q_stall"))
-    val st = stalls.head
-    // the PRIMARY timing is the original stalled wall, not the retry
-    assert(results == Seq("q_stall" -> st.timed))
-    assert(st.timed >= 0.2, s"timed=${st.timed}")
-    assert(st.retry >= 0.0 && st.retry < st.timed, s"retry=${st.retry}")
-    // steal is the per-query /proc/stat delta (>= 0 on Linux) or the -1
-    // unavailable marker — never garbage
-    assert(st.steal >= 0.0 || st.steal == -1.0, s"steal=${st.steal}")
-    // the retry runs between two cleanup passes (fresh-slot state)
-    assert(cleanups == 2)
   }
 
   test("stealJiffies reads a cumulative non-negative counter on Linux, -1 where unavailable") {
@@ -125,119 +97,75 @@ class BenchSpec extends AnyFunSuite {
     if (s >= 0) assert(Bench.stealJiffies() >= s, "steal counter must be monotonic")
   }
 
-  test("no re-measure within the stall window, for an unlisted query, or for a failed query") {
-    var runs = 0
-    val (_, failed, _, stalls) = Bench.timeQueries(
-      Seq(
-        "q_inside" -> (() => { runs += 1; Thread.sleep(30) }),
-        "q_unlisted" -> (() => { runs += 1; Thread.sleep(200) }),
-        // slow AND failed: the wall is meaningless, must not re-run
-        "q_failed" -> (() => { runs += 1; Thread.sleep(200); sys.error("boom") })),
-      stallRef = Map("q_inside" -> 0.02, "q_failed" -> 0.01),
-      stallFactor = 10.0, stallAbsFloor = 0.05)
-    assert(failed == Seq("q_failed"))
-    assert(stalls.isEmpty, stalls.toString)
-    assert(runs == 3, "no hidden re-runs")
-  }
-
-  test("a throwing stall retry records retry = -1 and never fails the query") {
-    var runs = 0
-    val (results, failed, fatal, stalls) = Bench.timeQueries(
-      Seq("q_flaky" -> (() => {
-        runs += 1
-        if (runs == 1) Thread.sleep(200) else sys.error("retry boom")
-      })),
-      stallRef = Map("q_flaky" -> 0.02),
-      stallFactor = 3.0, stallAbsFloor = 0.05)
-    assert(failed.isEmpty && fatal.isEmpty, "the retry is diagnosis — its failure is its own")
-    assert(results.head._2 >= 0.2)
-    assert(stalls.map(s => (s.name, s.retry)) == Seq(("q_flaky", -1.0)))
-  }
-
-  test("the DEFAULT stall trigger is 2x (r16 verdict item 1): a 2.5x excess re-measures") {
-    // r16's two unexonerated driver entries (q_pagerank 2.14x,
-    // q_allpairs_cosine 2.28x) fell in the old 3x trigger's 2-3x blind
-    // spot and carried no in-slot retry/steal evidence; this locks the
-    // widened default — stallFactor deliberately NOT passed
-    var runs = 0
-    val (_, failed, _, stalls) = Bench.timeQueries(
-      Seq("q_midband" -> (() => {
-        runs += 1
-        if (runs == 1) Thread.sleep(250) // ~2.5x the 0.1 s ref
-      })),
-      stallRef = Map("q_midband" -> 0.1),
-      stallAbsFloor = 0.05)
-    assert(failed.isEmpty)
-    assert(stalls.map(_.name) == Seq("q_midband"),
-      s"a 2.5x excess must trigger at the default factor (runs=$runs)")
-    assert(runs == 2)
-    // and a ~1.25x read stays inside the window at the default factor
-    var runs2 = 0
-    val (_, _, _, stalls2) = Bench.timeQueries(
-      Seq("q_inband" -> (() => { runs2 += 1; Thread.sleep(250) })),
-      stallRef = Map("q_inband" -> 0.2),
-      stallAbsFloor = 0.05)
-    assert(stalls2.isEmpty && runs2 == 1, stalls2.toString)
-  }
-
-  test("parseStallRef reads q_-prefixed entries from a bench_out line, skips wrapper fields") {
-    val f = java.nio.file.Files.createTempFile("stallref", ".json")
-    try {
-      java.nio.file.Files.writeString(f,
-        """{"metric":"total","value":237.0123,"unit":"sec","queries":{"q_a":1.5,"q_b":12.3456,"rest":9.9,"omitted":3},"sf":"/x"}""")
-      val m = Bench.parseStallRef(f.toString)
-      assert(m == Map("q_a" -> 1.5, "q_b" -> 12.3456), m.toString)
-      // space-padded JSON (json.dumps default) must parse identically —
-      // the r16 silent-empty-map regression
-      java.nio.file.Files.writeString(f,
-        """{"metric": "total", "value": 237.0, "queries": {"q_a": 1.5, "q_b": 12.3456}, "sf": "/x"}""")
-      val m2 = Bench.parseStallRef(f.toString)
-      assert(m2 == Map("q_a" -> 1.5, "q_b" -> 12.3456), m2.toString)
-      // absent file: empty map, no throw (bench runs without transparency)
-      assert(Bench.parseStallRef("/nonexistent/ref.json").isEmpty)
-      // scientific notation (json.dumps writes tiny values as 8.5e-05)
-      // must parse as the full value, not stop at the mantissa — the r16
-      // advice silent-reference-inflation class
-      java.nio.file.Files.writeString(f,
-        """{"queries": {"q_tiny": 8.5e-05, "q_exp": 1.2E+1, "q_plain": 3.5}}""")
-      val m3 = Bench.parseStallRef(f.toString)
-      assert(m3 == Map("q_tiny" -> 8.5e-05, "q_exp" -> 12.0, "q_plain" -> 3.5),
-        m3.toString)
-    } finally java.nio.file.Files.delete(f)
-  }
-
-  test("resolveStallRefPath finds the committed default anchor from ANY cwd (r16 advice)") {
-    // run-from-repo-root: the literal relative path wins
-    val root = Bench.repoRoot()
-    assert(root.exists(p =>
-      java.nio.file.Files.isReadable(p.resolve("build.sbt"))), root.toString)
-    // run from elsewhere (the silent-disable failure class): the default
-    // anchor must resolve against the repo root, not the cwd
-    val elsewhere = java.nio.file.Files.createTempDirectory("benchcwd")
-    try {
-      val resolved = Bench.resolveStallRefPath("bench_anchor_r18.json", elsewhere)
-      assert(java.nio.file.Files.isReadable(java.nio.file.Paths.get(resolved)),
-        s"default anchor unresolved from $elsewhere -> $resolved")
-      assert(resolved == root.get.resolve("bench_anchor_r18.json").toString)
-      // a cwd-local file still wins over the root copy (explicit relative
-      // overrides stay cwd-relative)
-      val local = elsewhere.resolve("bench_anchor_r18.json")
-      java.nio.file.Files.writeString(local, """{"queries":{"q_a":1.0}}""")
-      assert(Bench.resolveStallRefPath("bench_anchor_r18.json", elsewhere)
-        == local.toString)
-      java.nio.file.Files.delete(local)
-      // a name that resolves nowhere falls through unchanged (parseStallRef
-      // then warns and main prints the loud stdout notice)
-      assert(Bench.resolveStallRefPath("no_such_anchor_xyz.json", elsewhere)
-        == "no_such_anchor_xyz.json")
-    } finally java.nio.file.Files.delete(elsewhere)
-  }
-
   test("stealTotalJson emits the run-total steal CPU-s, or nothing where unavailable") {
     assert(Bench.stealTotalJson(100L, 250L) == ""","steal_total":1.5000""")
     assert(Bench.stealTotalJson(0L, 0L) == ""","steal_total":0.0000""")
     // either sample unavailable: no field, never a garbage delta
     assert(Bench.stealTotalJson(-1L, 250L) == "")
     assert(Bench.stealTotalJson(100L, -1L) == "")
+  }
+
+  // --- per-query explanation: wall, process CPU-s, steal CPU-s ------------
+
+  test("each timing carries process CPU-s that tells a busy query from a waiting one") {
+    // the rule every Bench timing is read by: a wall that rises with flat
+    // cpu_s and rising steal_s is a contended host; a wall that rises with
+    // cpu_s is slower code. A spinner and a sleeper of the same wall must
+    // therefore read far apart on cpu. Margins hold on a loaded 4-core box.
+    def spin(): Unit = {
+      val end = System.nanoTime() + 300000000L
+      while (System.nanoTime() < end) ()
+    }
+    // no System.gc() cleanup between the two: the GC work it leaves
+    // running concurrently reads as ~0.4 CPU-s in the sleeper's window
+    val (timings, failed, fatal) = Bench.timeQueries(
+      Seq("q_spin" -> (() => spin()), "q_sleep" -> (() => Thread.sleep(300))))
+    assert(failed.isEmpty && fatal.isEmpty)
+    assert(timings.map(_.name) == Seq("q_spin", "q_sleep"))
+    val Seq(spinner, sleeper) = timings
+    // the primary number is the timed wall
+    assert(timings.forall(_.wall >= 0.3), timings.toString)
+    assert(spinner.cpu >= 0.15 && spinner.cpu >= spinner.wall / 2, spinner.toString)
+    assert(sleeper.cpu >= 0.0 && sleeper.cpu < 0.10, sleeper.toString)
+    // steal is the per-query /proc/stat delta, or the -1 unavailable marker
+    assert(timings.forall(t => t.steal >= 0.0 || t.steal == -1.0), timings.toString)
+    // bench_out.json carries both per-query maps, keyed exactly like "queries"
+    val line = s"""{"queries":{}${Bench.cpuStealJson(timings)}}"""
+    def keysOf(field: String): Seq[String] = {
+      val body = s""""$field":\\{([^}]*)\\}""".r.findFirstMatchIn(line)
+        .getOrElse(fail(s"no $field in $line")).group(1)
+      """"([^"]+)":""".r.findAllMatchIn(body).map(_.group(1)).toSeq
+    }
+    assert(keysOf("cpu_s") == Seq("q_spin", "q_sleep"), line)
+    assert(keysOf("steal_s") == Seq("q_spin", "q_sleep"), line)
+  }
+
+  test("the stdout line keeps the slowest entries within 1700 chars and sums the rest") {
+    // 198 names of the suite's real length (q_ + 10-24 chars) and distinct
+    // times, so the slowest-first order is unambiguous
+    val rnd = new scala.util.Random(7)
+    val results = (1 to 198).map { i =>
+      val name = "q_" + Seq.fill(10 + i % 15)(('a' + rnd.nextInt(26)).toChar).mkString + i
+      name -> (rnd.nextInt(300000) / 10000.0 + i * 1e-4)
+    }
+    def lineOf(qs: String): String =
+      s"""{"metric":"total","value":1234.5678,"unit":"sec","queries":$qs,"steal_total":12.3400,"sf":"/data/sf0.01"}"""
+    val line = Bench.stdoutLine(results, lineOf)
+    assert(line.length <= 1700, s"${line.length} chars")
+    val entries = """"(q_[^"]+)":([0-9.]+)""".r.findAllMatchIn(line)
+      .map(m => m.group(1) -> m.group(2).toDouble).toSeq
+    val bySlowest = results.sortBy { case (k, v) => (-v, k) }
+    assert(entries.nonEmpty && entries.length < results.length)
+    assert(entries.map(_._1) == bySlowest.take(entries.length).map(_._1))
+    val omitted = bySlowest.drop(entries.length)
+    val rest = """"rest":([0-9.]+)""".r.findFirstMatchIn(line).get.group(1).toDouble
+    assert(math.abs(rest - omitted.map(_._2).sum) <= 0.00005 + 1e-9, s"rest=$rest")
+    assert(""""omitted":([0-9]+)""".r.findFirstMatchIn(line).get.group(1).toInt ==
+      omitted.length, line)
+    // entries that all fit print the full line, unaggregated
+    val few = results.take(5)
+    assert(Bench.stdoutLine(few, lineOf) ==
+      lineOf(few.map { case (k, v) => "\"" + k + "\":" + "%.4f".formatLocal(java.util.Locale.ROOT, v) }
+        .mkString("{", ",", "}")))
   }
 }
