@@ -107,15 +107,15 @@ object Bench {
     (timings.toList, failed.toList, fatal)
   }
 
-  /** `,"steal_total":X.XX` for the bench JSON line — the run's total
-    * hypervisor steal in CPU-seconds over the timed window (r16 verdict
-    * item 7: one number that makes a contended window visible instead of
-    * inferring it from mover patterns). Empty where /proc/stat steal is
-    * unavailable (either sample -1) — never a garbage delta.
+  /** `,"steal_total":X.XX` for the bench JSON line — the sum of the timed
+    * queries' steal CPU-s, so it explains the timed total and nothing else
+    * (r16 verdict item 7: one number that makes a contended window visible
+    * instead of inferring it from mover patterns). Empty where any query's
+    * steal is unavailable (-1) — never a partial or garbage sum.
     */
-  private[graft] def stealTotalJson(startJiffies: Long, endJiffies: Long): String =
-    if (startJiffies < 0 || endJiffies < 0) ""
-    else s""","steal_total":${fmt((endJiffies - startJiffies) / 100.0)}"""
+  private[graft] def stealTotalJson(timings: Seq[Timing]): String =
+    if (timings.exists(_.steal < 0)) ""
+    else s""","steal_total":${fmt(timings.map(_.steal).sum)}"""
 
   /** 4-decimal seconds (0.1 ms resolution — far below host-window noise). */
   private def fmt(v: Double): String =
@@ -193,10 +193,6 @@ object Bench {
     // 13.6 s-vs-3.8 s flap shape.
     spark.catalog.clearCache()
     System.gc()
-    // run-total steal window: from just before the first timed query to
-    // just after the last (the staging/warmup passes above are untimed and
-    // excluded — the number should explain the TIMED totals)
-    val stealRun0 = stealJiffies()
     val (timings, failed, fatal) = timeQueries(
       SparkEntry.queries.toSeq.sortBy(_._1)
         .map { case (name, fn) => name -> (() => { fn(spark, sfDir).count(); () }) },
@@ -215,14 +211,12 @@ object Bench {
       preWarm = name =>
         try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
         finally spark.catalog.clearCache())
-    val stealRun1 = stealJiffies()
     val total = timings.map(_.wall).sum
     val failedJson =
       if (failed.isEmpty) ""
       else failed.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
     val taintedJson = fatal.fold("")(f => s""","tainted":"$f"""")
-    // run-total steal CPU-s over the timed window (r16 verdict item 7)
-    val stealJson = stealTotalJson(stealRun0, stealRun1)
+    val stealJson = stealTotalJson(timings)
     def lineOf(qs: String, perQuery: String = ""): String =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$perQuery$failedJson$taintedJson$stealJson,"sf":"$sfDir"}"""
     // Full per-query maps (alphabetical): wall, process CPU-s and steal

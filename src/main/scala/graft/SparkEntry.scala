@@ -20,7 +20,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.salesDaily(spark, "/root/testdata/sf0.001")
 
-  /** The one local session the harness mains (Bench, Verify, Plans) and the
+  /** The one local session the harness mains (Bench, Verify) and the
     * test suites run on: `local[cpus]` with `cpus` shuffle partitions, UI
     * off, UTC session time zone, log level WARN. (Run and RunCleanup build
     * their own: their master comes from spark-submit.)

@@ -924,11 +924,12 @@ object Corpus {
     * w = n_chars + 1, i.e. length-proportional sampling — the standard
     * "sample training docs proportional to token count" pass.
     *
-    * Scale shape (100 TB): one narrow projection and ONE top-k-per-group —
-    * at production scale the row_number window over a salted two-phase
-    * top-k; at fixture scale the plain window is the right plan (the
-    * per-source partitions are the parallelism). No RNG: u is md5-derived,
-    * so the sample is reproducible and exactly oracle-checkable.
+    * Scale shape (100 TB): one narrow projection and ONE top-k-per-group.
+    * The rank cut plans as a PARTIAL WindowGroupLimit below the source-key
+    * exchange: each task keeps only K rows per source before shuffling, so
+    * the plain row_number window is already the two-phase top-k at scale.
+    * No RNG: u is md5-derived, so the sample is reproducible and exactly
+    * oracle-checkable.
     *
     * Determinism: u is an exact double (52 md5 bits / 2^52); the ln only
     * ORDERS rows (a cross-engine last-ulp difference would need two keys

@@ -148,11 +148,11 @@ object Dedup {
     */
   def stageDocShingles(spark: SparkSession, dir: String): String = {
     val t = docShinglesTable(dir)
-    if (graft.util.Staged.needsBuild(spark, t)(loc =>
+    graft.util.Staged.stage(spark, t)(loc =>
         s"""CREATE TABLE $t (doc_id BIGINT, shingles ARRAY<STRING>)
            |USING PARQUET
            |CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO $ShingleBuckets BUCKETS
-           |LOCATION '$loc'""".stripMargin)) {
+           |LOCATION '$loc'""".stripMargin) {
       docShingles(spark, dir)
         // repartition on the bucket column first (the EdgeBuckets rule):
         // the bucket hash and the shuffle hash agree, so each task owns
@@ -195,16 +195,20 @@ object Dedup {
     */
   def stageDedupPairs(spark: SparkSession, dir: String): String = {
     val t = dedupPairsTable(dir)
-    if (graft.util.Staged.needsBuild(spark, t)(loc =>
+    graft.util.Staged.stage(spark, t)(loc =>
         s"""CREATE TABLE $t (doc_a BIGINT, doc_b BIGINT)
            |USING PARQUET
            |CLUSTERED BY (doc_a) SORTED BY (doc_a) INTO $ShingleBuckets BUCKETS
-           |LOCATION '$loc'""".stripMargin)) {
-      jaccardPairsCapped(docShinglesStaged(spark, dir), MaxShingleDF)
+           |LOCATION '$loc'""".stripMargin) {
+      val sh = docShinglesStaged(spark, dir)
+      jaccardPairsCapped(sh, MaxShingleDF)
         .select("doc_a", "doc_b")
         .repartition(ShingleBuckets, col("doc_a"))
         .write.bucketBy(ShingleBuckets, "doc_a").sortBy("doc_a")
         .mode("overwrite").saveAsTable(t)
+      // jaccardPairsCapped pinned its shingle input; the write was its
+      // only consumer (the Staged.stage pin rule)
+      sh.unpersist(blocking = false)
     }
     t
   }
@@ -241,11 +245,11 @@ object Dedup {
     */
   def stageSimhashFp(spark: SparkSession, dir: String): String = {
     val t = simhashFpTable(dir)
-    if (graft.util.Staged.needsBuild(spark, t)(loc =>
+    graft.util.Staged.stage(spark, t)(loc =>
         s"""CREATE TABLE $t (doc_id BIGINT, fp BIGINT)
            |USING PARQUET
            |CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO $ShingleBuckets BUCKETS
-           |LOCATION '$loc'""".stripMargin)) {
+           |LOCATION '$loc'""".stripMargin) {
       simhashFingerprints(spark, dir)
         .repartition(ShingleBuckets, col("doc_id"))
         .write.bucketBy(ShingleBuckets, "doc_id").sortBy("doc_id")
@@ -738,6 +742,10 @@ object Dedup {
       // the self-join — persisted so the signature computation (12 md5s per
       // shingle over the whole corpus) runs once, not twice
       .persist()
+    // materialized before the self-join is planned: over an unmaterialized
+    // pin, AQE runs one cache stage per join side and broadcasts whichever
+    // side finishes first, so the build side changed from run to run
+    banded.count()
     val cand = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.doc_id") < col("b.doc_id"))

@@ -191,11 +191,11 @@ object Graph {
     */
   def stageCopurchaseEdges(spark: SparkSession, dir: String): String = {
     val t = copurchaseTable(dir)
-    if (graft.util.Staged.needsBuild(spark, t)(loc =>
+    graft.util.Staged.stage(spark, t)(loc =>
         s"""CREATE TABLE $t (u BIGINT, v BIGINT, w BIGINT, s BIGINT)
            |USING PARQUET
            |CLUSTERED BY (u) SORTED BY (u) INTO $EdgeBuckets BUCKETS
-           |LOCATION '$loc'""".stripMargin)) {
+           |LOCATION '$loc'""".stripMargin) {
       val li = Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
       val pairs = li.as("a").join(li.as("b"),

@@ -608,7 +608,7 @@ object Relational {
     // present in BOTH dirs — the tables stage-or-recover as a PAIR),
     // re-register both as external bucketed tables instead of paying the
     // clustering write again; a partial or half-staged pair is swept and
-    // rewritten (graft.util.Staged.needsBuildPair scaladoc).
+    // rewritten (graft.util.Staged.stagePair scaladoc).
     def register(t: String): Unit = {
       val (schema, key) =
         if (t == ot) (Tables.orders(spark, dir).schema, "o_orderkey")
@@ -618,7 +618,7 @@ object Relational {
            |CLUSTERED BY ($key) SORTED BY ($key) INTO $JoinBuckets BUCKETS
            |LOCATION '${graft.util.Staged.locOf(spark, t)}'""".stripMargin)
     }
-    if (graft.util.Staged.needsBuildPair(spark, ot, lt)(register)) {
+    graft.util.Staged.stagePair(spark, ot, lt)(register) {
       Tables.orders(spark, dir).write.mode("overwrite")
         .bucketBy(JoinBuckets, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)
       Tables.lineitem(spark, dir).write.mode("overwrite")
@@ -893,10 +893,10 @@ object Relational {
     */
   def stageCustomerBaskets(spark: SparkSession, dir: String): String = {
     val t = customerBasketsTable(dir)
-    if (graft.util.Staged.needsBuild(spark, t)(loc =>
+    graft.util.Staged.stage(spark, t)(loc =>
         s"""CREATE TABLE $t (ck BIGINT, part BIGINT) USING PARQUET
            |CLUSTERED BY (ck) SORTED BY (ck) INTO $BasketBuckets BUCKETS
-           |LOCATION '$loc'""".stripMargin)) {
+           |LOCATION '$loc'""".stripMargin) {
       customerBaskets(spark, dir)
         .repartition(BasketBuckets, col("ck"))
         .write.bucketBy(BasketBuckets, "ck").sortBy("ck")
@@ -1228,7 +1228,8 @@ object Relational {
     * Yesterday/today snapshots are derived deterministically from the
     * fixture (planted changes, inserts, and deletes), and the emitted
     * action audit carries exact key sums so a misclassified key fails the
-    * hash gate.
+    * hash gate. The action fan-out (a change emits close + open) is an
+    * array explode over the joined rows, never a second pass.
     */
   def scd2(spark: SparkSession, dir: String): DataFrame = {
     val dim = Tables.customer(spark, dir)

@@ -457,7 +457,7 @@ object Similarity {
     // pair-completeness recovery (the stageBucketedTables shape): both
     // tables stage-or-recover TOGETHER through the shared pair scaffold —
     // a half-staged crash state drops back to disk and rebuilds
-    // (graft.util.Staged.needsBuildPair scaladoc)
+    // (graft.util.Staged.stagePair scaladoc)
     import graft.util.Staged
     def register(t: String): Unit =
       if (t == cellsT) {
@@ -471,7 +471,7 @@ object Similarity {
           s"""CREATE TABLE $centsT (cent_id BIGINT, cv ARRAY<DOUBLE>, nc DOUBLE)
              |USING PARQUET LOCATION '${Staged.locOf(spark, centsT)}'""".stripMargin)
       }
-    if (Staged.needsBuildPair(spark, cellsT, centsT)(register)) {
+    Staged.stagePair(spark, cellsT, centsT)(register) {
       val vecs = vectors(spark, dir)
       val seeds = vecs.filter(col("vec_id") % stride === 0)
         .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nv").as("nc"))
@@ -860,9 +860,9 @@ object Similarity {
     */
   def stageKnnTruth(spark: SparkSession, dir: String): String = {
     val t = knnTruthTable(dir)
-    if (graft.util.Staged.needsBuild(spark, t)(loc =>
+    graft.util.Staged.stage(spark, t)(loc =>
         s"""CREATE TABLE $t (query_id BIGINT, neighbor_id BIGINT,
-           |rank INT, sim DOUBLE) USING PARQUET LOCATION '$loc'""".stripMargin)) {
+           |rank INT, sim DOUBLE) USING PARQUET LOCATION '$loc'""".stripMargin) {
       knnBruteForce(spark, dir).write.mode("overwrite").saveAsTable(t)
     }
     t
@@ -1435,6 +1435,11 @@ object Similarity {
     * same scan shape as [[knnBruteForce]] but over reconstructed vectors —
     * compose with IVF cell pruning at scale exactly like [[knnIvfPq]].
     *
+    * Plan: the per-dim bounds are 2·Dim map-side-combinable min/max
+    * aggregates in one corpus pass (never a posexplode), broadcast as one
+    * row; codes and bucket-center reconstruction fuse into one projection;
+    * the per-query top-k is a partial WindowGroupLimit.
+    *
     * Deterministic end-to-end: exact min/max bounds, floor-based codes, and
     * sequential-fold cosines — the quantized index is bit-identical on both
     * engines, so the ANN results are exactly oracle-checkable.
@@ -1739,51 +1744,34 @@ object Similarity {
     * routing) READS the assignment table instead of re-running Lloyd. Bench
     * stages it in the untimed warmup next to the bucketed tables and the
     * IVF layout (the write-once/consume-many placement the staged-IVF
-    * precedent established); when the table is absent the consumers
-    * compute the chain inline — results are bit-identical either way
-    * (long ids survive the parquet roundtrip exactly), so the shared
-    * oracle is unchanged.
+    * precedent established); a consumer that runs first stages it itself.
+    * Long ids survive the parquet roundtrip exactly, so the consumers
+    * match the live Lloyd chain of [[kmeans]] and share its oracle.
     */
   def stageKmeansCells(spark: SparkSession, dir: String): String = {
     val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
     val t = s"kmeans_cells${KmeansIters}_$CentroidStride$safe"
-    if (graft.util.Staged.needsBuild(spark, t)(loc =>
+    graft.util.Staged.stage(spark, t)(loc =>
         s"""CREATE TABLE $t (vec_id BIGINT, cell BIGINT)
-           |USING PARQUET LOCATION '$loc'""".stripMargin)) {
+           |USING PARQUET LOCATION '$loc'""".stripMargin) {
       val vecs = vectors(spark, dir).persist()
       vecs.count()
       val cents = lloydCents(vecs, KmeansIters)
       assignCellsSim(vecs, cents).select(col("vec_id"), col("cell"))
         .write.mode("overwrite").saveAsTable(t)
       vecs.unpersist(blocking = false)
+      cents.unpersist(blocking = false) // lloydCents pins its last generation
     }
     t
   }
 
-  /** The (vec_id, cell) assignment relation: the staged table when present
-    * (see [[stageKmeansCells]]), else the inline Lloyd chain.
+  /** The (vec_id, cell) assignment relation, read off the staged table
+    * (self-staging on first use, the consumer pattern of every staged
+    * artifact): a consumer plans the same whether or not an earlier caller
+    * in this JVM staged it.
     */
-  private def kmeansCells(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val t = s"kmeans_cells${KmeansIters}_$CentroidStride$safe"
-    if (spark.catalog.tableExists(t)) spark.table(t)
-    else {
-      val vecs = vectors(spark, dir).persist()
-      vecs.count()
-      val cents = lloydCents(vecs, KmeansIters)
-      // materialize the narrow assignment, then release the fat vectors
-      // cache (mirrors stageKmeansCells): without this, a session running
-      // both cluster consumers unstaged holds two cached corpus-vector
-      // copies. The assignment cache itself is (vec_id, cell)-narrow and
-      // consumer-managed (clusterSample re-persists/uses it; Bench clears
-      // caches between queries).
-      val assigned = assignCellsSim(vecs, cents)
-        .select(col("vec_id"), col("cell")).persist()
-      assigned.count()
-      vecs.unpersist(blocking = false)
-      assigned
-    }
-  }
+  private def kmeansCells(spark: SparkSession, dir: String): DataFrame =
+    spark.table(stageKmeansCells(spark, dir))
 
   /** q_cluster_sample: cluster-balanced sampling — the embedding-side
     * composed pipeline (the semantic twin of the text funnel

@@ -414,6 +414,11 @@ object TextAnalysis {
     * (tf-idf's production-grade successor: saturating tf, length
     * normalization). Ranking happens on the exact decimal sum; only the
     * emitted score is a double.
+    *
+    * Plan: the inverted-index shape — the probe terms broadcast into the
+    * postings join, so scoring is O(matched postings); per-term doubles are
+    * decimal-summed (aggregation-order independent) and the result is a
+    * TakeOrdered partial top-k.
     */
   def bm25TopK(spark: SparkSession, dir: String): DataFrame =
     bm25Scores(spark, dir)

@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.CacheBridge
 
 /** The write-once staged-artifact recovery scaffold shared by every
   * `stage*` function (r12 review follow-through: eight call sites had
@@ -46,27 +47,25 @@ object Staged {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
-  /** Single-table scaffold: returns true iff the caller must BUILD the
-    * artifact (fresh stage, or a swept partial); false when the table is
-    * already registered, or a finished on-disk stage was just
-    * re-registered through `registerDdl` (which receives the location
-    * string to interpolate into its `LOCATION` clause).
+  /** Single-table scaffold: runs `build` (a fresh stage, or a swept
+    * partial) unless the table is already registered or a finished on-disk
+    * stage was just re-registered through `registerDdl` (which receives the
+    * location string to interpolate into its `LOCATION` clause).
     */
-  def needsBuild(spark: SparkSession, table: String)
-                (registerDdl: String => String): Boolean =
-    if (spark.catalog.tableExists(table)) false
-    else if (isComplete(spark, table)) {
-      spark.sql(registerDdl(locOf(spark, table).toString))
-      false
-    } else {
+  def stage(spark: SparkSession, table: String)
+           (registerDdl: String => String)(build: => Unit): Unit =
+    if (spark.catalog.tableExists(table)) ()
+    else if (isComplete(spark, table)) spark.sql(registerDdl(locOf(spark, table).toString))
+    else {
       sweep(spark, table)
-      true
+      pinFree(spark, table)(build)
     }
 
   /** Pair scaffold for tables that stage-or-recover TOGETHER (the
-    * bucketed-join and IVF pairs). Returns true iff the caller must BUILD
-    * both; `register` re-registers ONE named table from its finished
-    * on-disk stage (called once per missing table).
+    * bucketed-join and IVF pairs): runs `build`, which writes both, unless
+    * both are registered or finished on disk; `register` re-registers ONE
+    * named table from its finished on-disk stage (called once per missing
+    * table).
     *
     * Closes the half-staged crash hole (r12 review): a crash between the
     * pair's two writes/registers leaves exactly one table in the catalog,
@@ -78,14 +77,12 @@ object Staged {
     * genuinely partial pair (either half incomplete) is dropped back to
     * disk, swept, and rebuilt as a unit.
     */
-  def needsBuildPair(spark: SparkSession, a: String, b: String)
-                    (register: String => Unit): Boolean = {
+  def stagePair(spark: SparkSession, a: String, b: String)
+               (register: String => Unit)(build: => Unit): Unit = {
     val missing = Seq(a, b).filterNot(spark.catalog.tableExists)
-    if (missing.isEmpty) return false
-    if (isComplete(spark, a) && isComplete(spark, b)) {
-      missing.foreach(register)
-      false
-    } else {
+    if (missing.isEmpty) ()
+    else if (isComplete(spark, a) && isComplete(spark, b)) missing.foreach(register)
+    else {
       // partial pair: drop any registered half (a managed drop deletes its
       // files, correctly failing a later completeness probe), sweep both,
       // rebuild as a unit
@@ -93,7 +90,25 @@ object Staged {
         .foreach(t => spark.sql(s"DROP TABLE $t"))
       sweep(spark, a)
       sweep(spark, b)
-      true
+      pinFree(spark, s"$a/$b")(build)
     }
+  }
+
+  /** A build is a one-time write, and it must leave the session's cache
+    * with no more persisted relations than it found. A pin it leaves behind
+    * has been materialized by the write, so every later plan in the session
+    * that contains the pinned subtree reads it as an InMemoryRelation with
+    * measured statistics, and a broadcast side can flip: the consumer would
+    * plan one way after this JVM built the artifact and another after a
+    * later JVM re-registered it. A build that breaks the rule fails here,
+    * loudly, rather than shifting plans downstream.
+    */
+  private def pinFree(spark: SparkSession, what: String)(build: => Unit): Unit = {
+    val before = CacheBridge.cachedEntries(spark)
+    build
+    val left = CacheBridge.cachedEntries(spark) - before
+    require(left <= 0,
+      s"staging $what left $left persisted relation(s) in the session cache; " +
+        "unpersist what the build pinned once its write is done")
   }
 }

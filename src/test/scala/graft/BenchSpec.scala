@@ -98,11 +98,13 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("stealTotalJson emits the run-total steal CPU-s, or nothing where unavailable") {
-    assert(Bench.stealTotalJson(100L, 250L) == ""","steal_total":1.5000""")
-    assert(Bench.stealTotalJson(0L, 0L) == ""","steal_total":0.0000""")
-    // either sample unavailable: no field, never a garbage delta
-    assert(Bench.stealTotalJson(-1L, 250L) == "")
-    assert(Bench.stealTotalJson(100L, -1L) == "")
+    def t(steal: Double) = Bench.Timing("q", 1.0, 1.0, steal)
+    // the sum of the per-query steal_s: the timed window and nothing else
+    assert(Bench.stealTotalJson(Seq(t(1.0), t(0.5))) == ""","steal_total":1.5000""")
+    assert(Bench.stealTotalJson(Seq(t(0.0))) == ""","steal_total":0.0000""")
+    // any query's steal unavailable: no field, never a partial sum
+    assert(Bench.stealTotalJson(Seq(t(-1.0), t(2.5))) == "")
+    assert(Bench.stealTotalJson(Seq(t(1.0), t(-1.0))) == "")
   }
 
   // --- per-query explanation: wall, process CPU-s, steal CPU-s ------------

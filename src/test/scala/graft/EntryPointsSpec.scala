@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The runnable surface of the main tree is the daily run, the cleanup job
-  * and the three harness mains. A one-off profiler or A/B probe that grows a
+  * and the two harness mains. A one-off profiler or A/B probe that grows a
   * `main` (and usually its own SparkSession) under `src/main/scala` fails
   * here; such a probe belongs in a scratch checkout, not the library. Every
   * local session comes from the one builder, `SparkEntry.localSession`.
@@ -35,14 +35,14 @@ class EntryPointsSpec extends AnyFunSuite {
     found.result()
   }
 
-  test("the only mains under src/main/scala are Run, RunCleanup, Bench, Verify and Plans") {
+  test("the only mains under src/main/scala are Run, RunCleanup, Bench and Verify") {
     assert(objectsWith("""^\s*(?:override\s+)?def\s+main\s*\(""") ==
-      Set("graft.Run", "graft.RunCleanup", "graft.Bench", "graft.Verify", "graft.Plans"))
+      Set("graft.Run", "graft.RunCleanup", "graft.Bench", "graft.Verify"))
   }
 
   test("SparkSession.builder() is called only by SparkEntry.localSession, Run and RunCleanup") {
     // Run and RunCleanup take their master from spark-submit; every local
-    // session (Bench, Verify, Plans, the specs) comes from localSession
+    // session (Bench, Verify, the specs) comes from localSession
     assert(objectsWith("""^(?!\s*(?:\*|//))[^\n]*SparkSession\s*\.\s*builder\s*\(""") ==
       Set("graft.SparkEntry", "graft.Run", "graft.RunCleanup"))
   }

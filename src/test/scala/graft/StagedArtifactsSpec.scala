@@ -107,17 +107,21 @@ class StagedArtifactsSpec extends SparkSpec {
     val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
     val t = s"kmeans_cells${ops.Similarity.KmeansIters}_${ops.Similarity.CentroidStride}$safe"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    val liveMix = ops.Similarity.clusterMix(spark, dir).collect().toSeq
-    val liveSample = ops.Similarity.clusterSample(spark, dir).collect().toSeq
-    ops.Similarity.stageKmeansCells(spark, dir)
-    val stagedMixDf = ops.Similarity.clusterMix(spark, dir)
-    assert(stagedMixDf.queryExecution.optimizedPlan.toString.contains(t)
-        || stagedMixDf.queryExecution.executedPlan.toString.contains(t),
-      s"after staging, clusterMix should read table $t")
-    assert(stagedMixDf.collect().toSeq == liveMix,
-      "clusterMix: staged result differs from live result")
-    assert(ops.Similarity.clusterSample(spark, dir).collect().toSeq == liveSample,
-      "clusterSample: staged result differs from live result")
+    util.Staged.sweep(spark, t)
+    withClearCache {
+      // the consumers self-stage: even the first one reads the table
+      for (df <- Seq(ops.Similarity.clusterMix(spark, dir), ops.Similarity.clusterSample(spark, dir)))
+        assert(df.queryExecution.optimizedPlan.toString.contains(t)
+            || df.queryExecution.executedPlan.toString.contains(t),
+          s"cluster consumer should read table $t")
+      // the staged assignment is the live twin's Lloyd chain, cell by cell
+      val staged = spark.table(t).groupBy("cell")
+        .agg(count(lit(1)).as("n_members"), min("vec_id"), max("vec_id"))
+        .orderBy("cell").collect().toSeq
+      val live = ops.Similarity.kmeans(spark, dir)
+        .select("cell", "n_members", "min_member", "max_member").collect().toSeq
+      assert(staged == live, "staged kmeans cells differ from the live Lloyd chain of q_kmeans")
+    }
   }
 
   test("simhash fingerprints: staged artifact is a pure materialization; capped consumer reads it") {
